@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark entry point. Prints the full-precision per-query JSON
-  * first (also persisted to BENCH_FULL.json + /tmp/graft_bench.json), then a
+  * first (also persisted to /tmp/graft_bench.json, and to BENCH_FULL.json
+  * when the run is unrestricted: no SPARK_GRAFT_ONLY, no REPEAT), then a
   * SMALL fixed-size summary as the FINAL stdout line for the driver's
   * 2000-char tail capture. The per-query map is intentionally NOT on the
   * final line: at 172+ queries no per-query encoding fits the tail window,
@@ -196,9 +197,9 @@ object Bench {
     // (b) contention — external CPU share over threshold (round-6: the
     // driver's artifact ran 1.5x inflated under co-running load). The min
     // of first pass and re-run is graded; both numbers are reported.
-    val rerunEligible = only.isEmpty && repeat == 1
+    val fullCatalog = only.isEmpty && repeat == 1
     val rerunNames: Seq[String] =
-      if (!rerunEligible)
+      if (!fullCatalog)
         firstPass.collect { case (_, n, _, true, ext, _, _) if ext > ContendedShare => n }.distinct
       else
         firstPass.collect { case (_, n, t, true, ext, _, _) if t >= 3.0 || ext > ContendedShare => n }.distinct
@@ -247,7 +248,7 @@ object Bench {
       if (a + b <= 0) 0.0 else math.abs(a - b) / ((a + b) / 2)
     val DriftTrigger = 0.15
     val spread1 = spreadOf(calibPre, calibPost)
-    val doDriftRerun = spread1 > DriftTrigger && rerunEligible &&
+    val doDriftRerun = spread1 > DriftTrigger && fullCatalog &&
       !sys.env.contains("SPARK_GRAFT_NO_DRIFT_RERUN")
     val (driftMin, calibFinal) =
       if (!doDriftRerun) (Map.empty[String, Double], None)
@@ -298,9 +299,12 @@ object Bench {
         s""","loadavg_post":${fmt(loadavgPost, 2)}"""
     val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib_s":${fmt(calibS)},"calib_pre":${fmt(calibPre)},"calib_post":${fmt(calibPost)}$calibFinalJson$driftJson$loadavgJson,"queries":$qs,"first_pass":$firsts,"load":$loads,"rerun":$reruns,"contended":$contended,"errors":$errs,"sf":"$sfDir"}"""
     // persist the full line where it survives any stdout truncation: /tmp
-    // for this session's adjudications, and the repo cwd so the round
-    // commit carries every per-query number into history
-    for (p <- Seq("/tmp/graft_bench.json", "BENCH_FULL.json")) {
+    // for adjudications, and — for an unrestricted full-catalog run only —
+    // the repo cwd so the commit carries every per-query number into
+    // history; an isolated or repeat probe never overwrites BENCH_FULL.json
+    val outs = "/tmp/graft_bench.json" +:
+      (if (fullCatalog) Seq("BENCH_FULL.json") else Nil)
+    for (p <- outs) {
       try java.nio.file.Files.write(java.nio.file.Paths.get(p),
         (json + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
@@ -323,7 +327,7 @@ object Bench {
       .mkString("{", ",", "}")
     // contended as a COUNT here (the name list is unbounded under a fully
     // loaded box and would blow the tail window; names are in BENCH_FULL)
-    val summary = s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","calib_s":${fmt(calibS, 2)},"calib_pre":${fmt(calibPre, 2)},"calib_post":${fmt(calibPost, 2)}${calibFinal.map(v => s""","calib_final":${fmt(v, 2)}""").getOrElse("")},"drifted":$drifted$loadavgJson,"sf":"$sfShort","n_queries":${results.size},"errors":$errs,"contended":${contendedNames.size},"queries_full":"BENCH_FULL.json","fam_cs":$famCs}"""
+    val summary = s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","calib_s":${fmt(calibS, 2)},"calib_pre":${fmt(calibPre, 2)},"calib_post":${fmt(calibPost, 2)}${calibFinal.map(v => s""","calib_final":${fmt(v, 2)}""").getOrElse("")},"drifted":$drifted$loadavgJson,"sf":"$sfShort","n_queries":${results.size},"errors":$errs,"contended":${contendedNames.size},"queries_full":"${outs.last}","fam_cs":$famCs}"""
     spark.stop()
     println(summary)
     if (results.exists(!_._3)) sys.exit(1)

@@ -13,8 +13,8 @@ package graft.genomics
   * instead of decoding a silently-short payload — the same
   * fail-don't-truncate contract as the TopK spill reader. Each block is
   * ≤64 KiB uncompressed, so decode memory is block-bounded regardless of
-  * tile size; blocks inflate sequentially inside the one per-tile task
-  * the BCL decode already runs (`Bcl.decodeRun` — no extra shuffle).
+  * tile size; blocks inflate sequentially inside the tile's own task,
+  * the one that reads and transposes the tile (`Bcl.decodeRun`).
   *
   * CBCL (`.cbcl`, NovaSeq per-lane concatenated container: blocked tiles
   * + 2-bit quality BINNING + per-tile filter-excluded packing) decodes

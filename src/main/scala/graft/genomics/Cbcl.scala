@@ -27,15 +27,16 @@ package graft.genomics
   * the bin values round-trips byte-identical (the GenomicsSpec golden).
   *
   * `excludeNonPF=1` files store only pass-filter clusters; the expansion
-  * back to full cluster order needs the lane's `.filter` array, which
-  * lives with the per-(lane, tile) group in `Bcl.decodeRun` — decode
+  * back to full cluster order needs the tile's `.filter` array, which the
+  * tile's task in `Bcl.decodeRun` reads next to its cycles — decode
   * returns compact arrays tagged `pfOnly=true` and the transpose
   * re-inserts no-calls at filter-failed positions there.
   *
-  * Scale shape: one CBCL file = one `binaryFile` record = one flatMap
-  * task that inflates tile-by-tile (each tile bounded by its recorded
-  * uncompressed size); the per-(lane, tile) shuffle that follows is the
-  * SAME one flat BCL pays — no extra pass, no driver work.
+  * Scale shape: `Bcl.decodeRun` runs one task per tile. For each cycle
+  * that task calls [[decodeTile]], which reads the file's header and then
+  * only its own tile's gzip block at the offset the header gives — a
+  * surface file is never inflated whole once per tile. The driver reads
+  * one header per lane surface ([[readHeader]]) to learn its tiles.
   */
 object Cbcl {
 
@@ -86,37 +87,75 @@ object Cbcl {
     * loudly with the observed widths. */
   def decode(b: Array[Byte]): Seq[(Int, Array[Byte], Boolean)] = {
     val h = parseHeader(b)
+    var off = h.headerSize
+    h.tiles.map { t =>
+      requireInFile(t, off, b.length)
+      val outBytes = expand(h, t, b, off)
+      off += t.compressedSize
+      (t.tileNum, outBytes, h.excludeNonPF)
+    }
+  }
+
+  /** Parse the header of a CBCL file through positioned reads —
+    * `readAt(pos, len)` returns exactly `len` bytes at `pos` of a
+    * `fileLen`-byte file. Reads the header only, no tile block. */
+  def readHeader(fileLen: Long, readAt: (Long, Int) => Array[Byte]): Header = {
+    require(fileLen >= 12, s"cbcl: $fileLen bytes is too short for a header")
+    val headerSize = le32(readAt(2, 4), 0)
+    require(headerSize >= 12 && headerSize <= fileLen,
+      s"cbcl: header size $headerSize outside the $fileLen-byte file")
+    parseHeader(readAt(0, headerSize))
+  }
+
+  /** Decode ONE tile of a CBCL file, read as in [[readHeader]]: the
+    * header, then only this tile's gzip block. Returns `(bytes, pfOnly)`,
+    * equal to the tile's entry in [[decode]]. Loud, naming the tile, when
+    * the header does not list it or its block runs past the file end. */
+  def decodeTile(fileLen: Long, readAt: (Long, Int) => Array[Byte],
+                 tileNum: Int): (Array[Byte], Boolean) = {
+    val h = readHeader(fileLen, readAt)
+    val i = h.tiles.indexWhere(_.tileNum == tileNum)
+    require(i >= 0, s"cbcl: tile $tileNum is not in the header " +
+      s"(tiles ${h.tiles.map(_.tileNum).mkString(",")})")
+    val t = h.tiles(i)
+    val off = h.headerSize + h.tiles.take(i).map(_.compressedSize.toLong).sum
+    requireInFile(t, off, fileLen)
+    (expand(h, t, readAt(off, t.compressedSize), 0), h.excludeNonPF)
+  }
+
+  private def requireInFile(t: TileRecord, off: Long, fileLen: Long): Unit =
+    require(t.compressedSize >= 0 && off + t.compressedSize <= fileLen,
+      s"cbcl: tile ${t.tileNum} claims ${t.compressedSize} compressed " +
+        s"bytes at $off, file has $fileLen")
+
+  /** Inflate tile `t`'s gzip block at `b(off)` and expand its nibbles to
+    * flat-BCL bytes. */
+  private def expand(h: Header, t: TileRecord, b: Array[Byte],
+                     off: Int): Array[Byte] = {
     require(h.bitsPerBasecall == 2 && h.bitsPerQscore == 2,
       s"cbcl: unsupported packing ${h.bitsPerBasecall}-bit base / " +
         s"${h.bitsPerQscore}-bit qual (NovaSeq writes 2/2)")
     // bin index -> flat-BCL qual value (the mapped Q, capped at 6 bits);
     // bin 0 is the no-call bin
     val qOf = h.bins.map(_._2 min 63).toArray
-    var off = h.headerSize
-    h.tiles.map { t =>
-      require(off + t.compressedSize <= b.length,
-        s"cbcl: tile ${t.tileNum} claims ${t.compressedSize} compressed " +
-          s"bytes at $off, file has ${b.length}")
-      val packed = gunzip(b, off, t.compressedSize, t.uncompressedSize,
-        t.tileNum)
-      off += t.compressedSize
-      val nStored = math.min(t.nClusters.toLong, packed.length * 2L).toInt
-      require(packed.length >= (nStored + 1) / 2,
-        s"cbcl: tile ${t.tileNum} payload too short")
-      val outBytes = new Array[Byte](nStored)
-      var i = 0
-      while (i < nStored) {
-        val nib = if ((i & 1) == 0) packed(i >> 1) & 0x0f
-                  else (packed(i >> 1) >> 4) & 0x0f
-        val base = nib & 0x3
-        val bin = (nib >> 2) & 0x3
-        outBytes(i) =
-          if (bin == 0) 0 // no-call bin → flat-BCL no-call byte
-          else ((base | (qOf(bin) << 2)) & 0xff).toByte
-        i += 1
-      }
-      (t.tileNum, outBytes, h.excludeNonPF)
+    val packed = gunzip(b, off, t.compressedSize, t.uncompressedSize,
+      t.tileNum)
+    val nStored = math.min(t.nClusters.toLong, packed.length * 2L).toInt
+    require(packed.length >= (nStored + 1) / 2,
+      s"cbcl: tile ${t.tileNum} payload too short")
+    val outBytes = new Array[Byte](nStored)
+    var i = 0
+    while (i < nStored) {
+      val nib = if ((i & 1) == 0) packed(i >> 1) & 0x0f
+                else (packed(i >> 1) >> 4) & 0x0f
+      val base = nib & 0x3
+      val bin = (nib >> 2) & 0x3
+      outBytes(i) =
+        if (bin == 0) 0 // no-call bin → flat-BCL no-call byte
+        else ((base | (qOf(bin) << 2)) & 0xff).toByte
+      i += 1
     }
+    outBytes
   }
 
   private def gunzip(b: Array[Byte], off: Int, clen: Int, ulen: Int,

@@ -39,7 +39,8 @@ object SyntheticRun {
   val instrument = "M00001"
   val runNumber = 7
   val flowcell = "GRAFTFC01"
-  def runInfoXml: String =
+  def runInfoXml: String = runInfoXml(lanes = 1)
+  def runInfoXml(lanes: Int): String =
     s"""<?xml version="1.0"?>
        |<RunInfo Version="5">
        |  <Run Id="220101_${instrument}_000${runNumber}_$flowcell" Number="$runNumber">
@@ -51,7 +52,7 @@ object SyntheticRun {
        |      <Read Number="2" NumCycles="${rs.index}" IsIndexedRead="Y"/>
        |      <Read Number="3" NumCycles="${rs.r2}" IsIndexedRead="N"/>
        |    </Reads>
-       |    <FlowcellLayout LaneCount="1" SurfaceCount="1" SwathCount="1" TileCount="2"/>
+       |    <FlowcellLayout LaneCount="$lanes" SurfaceCount="1" SwathCount="1" TileCount="2"/>
        |  </Run>
        |</RunInfo>
        |""".stripMargin
@@ -114,16 +115,20 @@ object SyntheticRun {
     writeLocsFiles(laneDir, lane, tile, clusters.size)
   }
 
-  /** Write a 2-tile run of `perTile` clusters each; returns the run dir.
+  /** Write a run of `lanes` lanes with 2 tiles of `perTile` clusters
+    * each (every lane carries the same clusters); returns the run dir.
     * `bgzf = true` writes the SAME tile payloads as NovaSeq-style
     * `.bcl.bgzf` blocked-gzip files (GenomicsSpec pins the decode
     * byte-identical to the flat run's). */
   def writeRun(dir: Path, perTile: Int = 24, bgzf: Boolean = false,
-               bgzfBlock: Int = 16): Path = {
+               bgzfBlock: Int = 16, lanes: Int = 1): Path = {
     Files.createDirectories(dir)
-    Files.writeString(dir.resolve("RunInfo.xml"), runInfoXml)
-    writeTile(dir, 1, 1101, (0 until perTile).map(cluster), bgzf, bgzfBlock)
-    writeTile(dir, 1, 1102, (perTile until 2 * perTile).map(cluster), bgzf, bgzfBlock)
+    Files.writeString(dir.resolve("RunInfo.xml"), runInfoXml(lanes))
+    for (lane <- 1 to lanes) {
+      writeTile(dir, lane, 1101, (0 until perTile).map(cluster), bgzf, bgzfBlock)
+      writeTile(dir, lane, 1102, (perTile until 2 * perTile).map(cluster), bgzf,
+        bgzfBlock)
+    }
     dir
   }
 

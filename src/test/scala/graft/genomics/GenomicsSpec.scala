@@ -227,6 +227,113 @@ class GenomicsSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("filter")), e.getMessage)
   }
 
+  test("CBCL per-tile decode reads only its tile's block, equal to decode's entry") {
+    val t1 = binnedTile(1, 40); val t2 = binnedTile(2, 33)
+    val f1 = Array.tabulate(40)(i => if (i % 5 == 4) 0.toByte else 1.toByte)
+    val f2 = Array.tabulate(33)(i => if (i % 3 == 0) 0.toByte else 1.toByte)
+    /** Positioned reads on an in-memory file, loud past its end, logging
+      * how many bytes each call read. */
+    def reader(file: Array[Byte], log: collection.mutable.Buffer[Int])
+        : (Long, Int) => Array[Byte] = { (pos, len) =>
+      require(pos + len <= file.length, s"read of $len bytes at $pos")
+      log += len
+      file.slice(pos.toInt, pos.toInt + len)
+    }
+    for (excl <- Seq(false, true)) {
+      val file = Cbcl.write(Seq((1101, t1, f1), (1102, t2, f2)), cbclBins,
+        excludeNonPF = excl)
+      val h = Cbcl.parseHeader(file)
+      for (((tileNum, bytes, pfOnly), rec) <- Cbcl.decode(file).zip(h.tiles)) {
+        val log = collection.mutable.Buffer.empty[Int]
+        val (got, gotPf) = Cbcl.decodeTile(file.length, reader(file, log), tileNum)
+        assert(got.toSeq === bytes.toSeq, s"tile $tileNum excludeNonPF=$excl")
+        assert(gotPf === pfOnly)
+        // the header (its size field, then all of it) and this tile's block
+        assert(log.toSeq === Seq(4, h.headerSize, rec.compressedSize))
+      }
+      val e = intercept[IllegalArgumentException](
+        Cbcl.decodeTile(file.length, reader(file, collection.mutable.Buffer()), 1199))
+      assert(e.getMessage.contains("1199"), e.getMessage)
+      // a truncated file: the last tile's block runs past the end, while
+      // the first tile, read on its own, still decodes
+      val cut = file.dropRight(5)
+      val e2 = intercept[IllegalArgumentException](
+        Cbcl.decodeTile(cut.length, reader(cut, collection.mutable.Buffer()), 1102))
+      assert(e2.getMessage.contains("1102"), e2.getMessage)
+      assert(Cbcl.decodeTile(cut.length, reader(cut, collection.mutable.Buffer()),
+        1101)._1.toSeq === Cbcl.decode(file).head._2.toSeq)
+    }
+  }
+
+  test("decodeRun on a nonexistent run folder fails naming it") {
+    val missing = Files.createTempDirectory("graft_bcl_gone")
+      .resolve("no_such_run").toString
+    val e = intercept[IllegalArgumentException](
+      Bcl.decodeRun(spark, missing, rs))
+    assert(e.getMessage.contains(missing), e.getMessage)
+    // the pipeline reports the failure instead of an empty success
+    val prq = Files.createTempDirectory("graft_bcl_gone_prq").resolve("prq")
+    intercept[IllegalArgumentException](
+      Pipeline.run(spark, missing, rs, sheet, prq.toString, Seq("cat")))
+  }
+
+  test("decodeRun on an empty run folder fails naming it") {
+    val empty = Files.createTempDirectory("graft_bcl_empty")
+    Files.createDirectories(empty.resolve("L001").resolve("C1.1"))
+    val e = intercept[IllegalArgumentException](
+      Bcl.decodeRun(spark, empty.toString, rs))
+    assert(e.getMessage.contains(empty.toString), e.getMessage)
+  }
+
+  /** Run `body` and return, for each Spark job it submitted, the task
+    * count of each of the job's stages. */
+  private def jobsOf[A](body: => A): (A, Seq[Seq[Int]]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val tag = s"jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(t) if t == tag => jobs.add(e.stageInfos.map(_.numTasks))
+          case Some(t) if t == s"$tag-end" => marked.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val a = body
+      // a marker job: a listener sees events in order, so once the marker
+      // arrives every job `body` submitted has been recorded
+      sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(0), 1).count()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (a, scala.jdk.CollectionConverters.IteratorHasAsScala(
+        jobs.iterator()).asScala.toSeq)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("decodeRun lists on the driver: no job to build, one task per tile to run") {
+    // 2 lanes x 2 tiles x 11 cycles = 44 cycle files plus filters and
+    // coordinates: more than the 32 paths above which Spark's file index
+    // lists in a parallel job
+    val dir = SyntheticRun.writeRun(
+      Files.createTempDirectory("graft_bcl_shape"), lanes = 2)
+    val (ds, buildJobs) = jobsOf(Bcl.decodeRun(spark, dir.toString, SyntheticRun.rs))
+    assert(buildJobs === Seq())
+    // the decode's own RDD: Dataset.count() would add the one-task global
+    // aggregate that adaptive execution submits as a second job
+    val (n, countJobs) = jobsOf(ds.rdd.count())
+    assert(n === 2 * 2 * 24)
+    assert(countJobs === Seq(Seq(4)), "one job, one stage, one task per tile")
+  }
+
   test("chastity filter + demux assigns samples with 1-mismatch tolerance") {
     val reads = Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs))
     val demuxed = Demux.demux(reads, sheet).collect()
