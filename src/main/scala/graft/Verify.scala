@@ -23,6 +23,9 @@ object Verify {
       case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
       case None => SparkEntry.queries
     }
+    // a failed query is reported and the dump carries on; the run then
+    // exits non-zero naming every failure
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val tasks = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       pool.submit(new Runnable {
         override def run(): Unit =
@@ -30,6 +33,7 @@ object Verify {
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            failed.add(name)
           }
       })
     }
@@ -51,5 +55,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (!failed.isEmpty) {
+      import scala.jdk.CollectionConverters._
+      System.err.println(
+        s"[verify] failed: ${failed.asScala.toSeq.sorted.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -33,6 +33,15 @@ import org.apache.spark.sql.SparkSession
   * `executorMemMb`/`dynamicAllocation` from the submit wrapper; nothing
   * else in the engine changes — all operators size themselves off
   * `spark.sql.shuffle.partitions`.
+  *
+  * The conf is set here, once. Engine code never writes conf on a session
+  * it was handed: several jobs share one session (the reference's `jnum`;
+  * Verify runs queries concurrently), so a write would leak into its
+  * neighbours' plans. An iterative loop carries its width on its cached,
+  * pre-partitioned input (`GraphOps.loopPartitions`); an operator that
+  * needs other settings builds its own child session with `newSession()`
+  * (`RuntimeFilters.bloomJoin`, `Bucketing.bucketedJoin`, the stream
+  * replays).
   */
 object Sessions {
 

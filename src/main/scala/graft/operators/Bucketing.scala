@@ -53,7 +53,8 @@ object Bucketing {
     * the `merge` hint pins SMJ (a small side would otherwise broadcast and
     * silently skip the bucketed path being exercised); with both sides
     * bucketed on `key` with equal counts the plan has no Exchange and no
-    * Sort. */
+    * Sort. The join runs in its own `newSession()` (managed tables are
+    * shared across sessions), so its conf never reaches the caller's. */
   def bucketedJoin(spark: SparkSession, left: String, right: String,
                    key: String): DataFrame = {
     // Spark ≥3.0 ignores bucket sort order by default (reading it needs a
@@ -61,8 +62,9 @@ object Bucketing {
     // outputOrdering`); with writeBucketed's one-file-per-bucket layout
     // that listing is bucket-count-cheap and buys Sort elimination on
     // every downstream join, so this engine turns it on at the join site
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    spark.table(left).hint("merge")
-      .join(spark.table(right).hint("merge"), key)
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    ns.table(left).hint("merge")
+      .join(ns.table(right).hint("merge"), key)
   }
 }

@@ -379,7 +379,9 @@ object Dedup {
     * clusters typically finish in 1–2 rounds past the fused init.
     *
     * Scale: the doubled edge list is cached pre-partitioned on the loop's
-    * join key, so the |E|-sized side never re-enters an exchange — each
+    * join key at the loop width ([[GraphOps.loopPartitions]], which the
+    * cached input carries — the session conf is never written), so the
+    * |E|-sized side never re-enters an exchange — each
     * round shuffles only the |V|-row label table; `localCheckpoint`
     * truncates the growing lineage each round so plans don't deepen. Each
     * round is exactly ONE Spark action: the count of changed labels rides
@@ -392,8 +394,6 @@ object Dedup {
     * Returns (id, comp) with comp = min node id of the component; nodes
     * absent from `pairs` are absent here (callers re-attach singletons). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = pairs.sparkSession
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     // no distinct: pairs satisfy d1 < d2, so the two directions are
     // disjoint and per-direction duplicates only came from duplicate input
     // pairs (harmless to min-aggregation). The doubled edge list is cached
@@ -407,20 +407,12 @@ object Dedup {
       .union(pairs
         .select(col("d2").cast("long").as("a"), col("d1").cast("long").as("b")))
       .cache()
-    // Size the loop's shuffles from the MEASURED edge count (the count also
-    // materializes the cache): every stage of every round otherwise runs
-    // conf-many mostly-empty tasks, and per-round cost on small candidate
-    // graphs — the common case: near-dup pairs are sparse relative to the
-    // corpus — is pure task-scheduling overhead. ~2M edges (32 MB of id
-    // pairs) per partition; a 100 TB-scale pair list lands back on the
-    // session's configured parallelism.
-    val edgeCount = edges0.count()
-    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(1L, math.min(confParts.toLong,
-      (edgeCount + 2000000L - 1) / 2000000L)).toInt
+    // Size the loop from the MEASURED edge count (the count also
+    // materializes the cache): near-dup pairs are sparse relative to the
+    // corpus, so conf-many mostly-empty tasks would make per-round cost
+    // pure task-scheduling overhead (GraphOps.loopPartitions).
+    val loopParts = GraphOps.loopPartitions(pairs.sparkSession, edges0.count())
     val edges = edges0.repartition(loopParts, col("b")).cache()
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
     try {
     // round 0 fused into init: comp = min(self, direct neighbors). The edge
     // union is symmetric (every edge present in both orientations), so
@@ -430,7 +422,6 @@ object Dedup {
     var labels = edges.groupBy(col("b"))
       .agg(least(col("b"), min(col("a"))).as("comp"))
       .select(col("b").as("id"), col("comp")).graftCheckpoint()
-    if (verbose) println(f"GRAFT_CC init done t=${System.nanoTime() / 1e9}%.2f")
     // Every round is hook (comp' = min over self+neighbor labels) PLUS
     // shortcut (comp'' = comp'-of-comp', a pointer jump): the distance a
     // label has travelled at least doubles per round, so ANY diameter
@@ -479,8 +470,6 @@ object Dedup {
       // sum over an empty label table is null — empty graph is converged
       done = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
       round2 += 1
-      if (verbose)
-        println(f"GRAFT_CC round=$round2 changed=${obs.get("changed")} t=${System.nanoTime() / 1e9}%.2f")
     }
     if (!done) throw new IllegalStateException(
       s"connectedComponents did not converge after $round2 hook+shortcut " +
@@ -488,10 +477,6 @@ object Dedup {
       "non-deterministic input")
     labels
     } finally {
-      // the loop's shuffle-partition override is session-scoped — restore
-      // before returning (the final labels are checkpointed, nothing
-      // downstream depends on the loop conf)
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
       edges.unpersist()
       edges0.unpersist()
     }

@@ -12,14 +12,18 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Iterated-loop shuffle width from the MEASURED row count (~2M rows
-    * per partition, capped at the session's configured parallelism) — the
-    * connectedComponents lesson shared by every iterative op here:
-    * per-round cost on a small aggregated graph is otherwise pure
-    * task-scheduling overhead across conf-many mostly-empty partitions,
-    * while a crawl-scale table lands back on the session's width. */
-  private def loopPartitions(spark: org.apache.spark.sql.SparkSession,
-                             rowCount: Long): Int = {
+  /** Iterated-loop width from the MEASURED row count (~2M rows per
+    * partition, capped at the session's configured parallelism), shared by
+    * every iterative op here and [[Dedup.connectedComponents]]: per-round
+    * cost on a small aggregated graph is otherwise pure task-scheduling
+    * overhead across conf-many mostly-empty partitions, while a
+    * crawl-scale table lands back on the session's width. The width lives
+    * on the loop's cached input (`repartition(loopParts, key)`), whose
+    * partitioning the per-round joins keep — the session conf is never
+    * written; an operator that needs other conf uses its own
+    * `newSession()`. */
+  private[operators] def loopPartitions(
+      spark: org.apache.spark.sql.SparkSession, rowCount: Long): Int = {
     val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(1L, math.min(confParts.toLong,
       (rowCount + 2000000L - 1) / 2000000L)).toInt
@@ -33,10 +37,11 @@ object GraphOps {
     * (src, dst, weight) — at crawl scale this is the domain-adjacency
     * table, |domains|² worst case but power-law sparse in practice. The
     * weighted edge table and per-src out-weights are computed once,
-    * cached, and pre-partitioned on `src` — each of the `iters` rounds
-    * then shuffles only the |V|-row rank table to the same partitioning
-    * (the |E| side never re-shuffles, the [[Dedup.connectedComponents]]
-    * loop lesson), aggregates contributions by dst, and left-joins back
+    * cached, and pre-partitioned on `src` at the loop width
+    * ([[loopPartitions]]) — each of the `iters` rounds then shuffles
+    * only the |V|-row rank table to the same partitioning (the |E| side
+    * never re-shuffles, the [[Dedup.connectedComponents]] loop lesson),
+    * aggregates contributions by dst, and left-joins back
     * to the vertex set so sinks (no in-edges) keep their teleport mass.
     * `localCheckpoint` truncates lineage each round. Dangling vertices
     * (no OUT-edges) are supported: their mass is redistributed uniformly,
@@ -111,8 +116,6 @@ object GraphOps {
       .cache()
     val hasDangling = danglingNodes.count() > 0
 
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
     // bit-parity note: the uniform variant keeps `(1−d)/n` and `dMass/n`
     // as single driver-side divisions (not `(1−d)·tp` with tp = 1/n) —
     // the same IEEE ops the unrolled-CTE oracle performs
@@ -145,7 +148,6 @@ object GraphOps {
       }
       ranks
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
       flow.unpersist()
       nodes.unpersist()
       nodesTp.unpersist()
@@ -161,8 +163,9 @@ object GraphOps {
     *
     * Scale shape — the [[Dedup.connectedComponents]] loop machinery:
     * the symmetric edge list is cached pre-partitioned on the join key
-    * with loop shuffle-partitions sized from the MEASURED edge count, so
-    * each round shuffles only the frontier (|F| rows, ≤ one BFS level);
+    * at the loop width sized from the MEASURED edge count
+    * ([[loopPartitions]]), so each round shuffles only the frontier
+    * (|F| rows, ≤ one BFS level);
     * the frontier count rides the round's `localCheckpoint` action as an
     * observed metric — ONE data job per level plus one cheap block-union
     * job to fold the level into the visited set. Rounds = eccentricity
@@ -182,8 +185,6 @@ object GraphOps {
     val edgesP = sym.repartition(loopParts, col("a")).cache()
     edgesP.count()
     sym.unpersist()
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
     try {
       var visited = Seq((src, 0L)).toDF("node", "dist").graftCheckpoint()
       var frontier = visited
@@ -219,7 +220,6 @@ object GraphOps {
       }
       visited
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
       edgesP.unpersist()
     }
   }
@@ -314,9 +314,10 @@ object GraphOps {
     * iterations guarantees).
     *
     * Returns (node, auth, hub) raw doubles — callers round. Scale shape
-    * — the [[pageRank]] loop machinery: the distinct edge list is cached
-    * pre-partitioned with loop shuffle-partitions sized from the
-    * MEASURED edge count; each half-round shuffles |V| score rows into a
+    * — the [[pageRank]] loop machinery: the distinct edge list is cached,
+    * and the |V|-row node table is cached pre-partitioned on `node` at
+    * the loop width sized from the MEASURED edge count
+    * ([[loopPartitions]]); each half-round shuffles |V| score rows into a
     * per-node sum over in/out-neighbors; the final normalizers join in
     * as broadcast 1-row aggregates (no driver scalar in the result
     * path). */
@@ -331,8 +332,6 @@ object GraphOps {
       .repartition(loopParts, col("node"))
       .cache()
     nodes.count()
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
     try {
       // per-half-round localCheckpoint: the fused one-checkpoint-per-round
       // variant re-executes the auth joins inside the hub materialization
@@ -363,7 +362,6 @@ object GraphOps {
         .select(col("node"), (col("a") / col("sa")).as("auth"),
           (col("h") / col("sh")).as("hub"))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
       e.unpersist()
       nodes.unpersist()
     }

@@ -150,19 +150,12 @@ object StreamingQueries {
                        (build: DataFrame => DataFrame): DataFrame = {
     val staged = if (flush) stagedEventsFlushed(s, d) else stagedEvents(s, d)
     val ev = Tables.events(s, d).drop("props")
-    // 2 files per trigger over 4 staged files = 2 micro-batches: still a
-    // genuine multi-batch replay (state merge across batches exercised) at
-    // half the per-batch planning cost
-    // flush runs take one file per trigger so the two sentinel files land
-    // in SEPARATE micro-batches (watermark advance, then eviction)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", if (flush) "1" else "2").parquet(staged)
     val name = s"graft_stream_${ctr.incrementAndGet()}"
     // a stateful query creates (and commits) one state-store instance per
     // shuffle partition PER MICRO-BATCH — a stream-stream join holds FOUR
     // stores per partition, each commit a file write+rename, so the
     // per-batch floor is ~linear in the partition count while a replay
-    // batch holds a few MB. Round 16 (BatchFloorProbe): at 8 partitions a
+    // batch holds a few MB. Round 16 (OPTIMIZATION_r16.md): at 8 partitions a
     // 671-row ssjoin batch spent ~2.4 s summed in state commits vs ~0.3 s
     // at 2 — wall 4.87 → 3.51 s, results identical. Size the count from
     // the staged BYTES (for append-mode replays, state is watermark-
@@ -178,7 +171,7 @@ object StreamingQueries {
     // COMPLETE-mode state is CORPUS-sized, not batch-sized (round 17 —
     // VERDICT r16 #1): every batch re-merges and re-emits the whole
     // accumulated result, so merge parallelism dominates the commit
-    // floor that the byte heuristic optimizes. SessionProbe at sf0.1:
+    // floor that the byte heuristic optimizes. OPTIMIZATION_r17.md, sf0.1:
     // the session-window replay walls 1.67/1.59/1.40/1.55 s warm at
     // 2/4/8/16 partitions (16 pays ~1.9 s summed commits) — the knee is
     // the old 8, so complete mode floors there and still grows with
@@ -192,18 +185,23 @@ object StreamingQueries {
     val stateParts =
       if (mode == "complete") math.max(math.min(confParts, 8), byteParts)
       else byteParts
-    if (sys.env.contains("GRAFT_STREAM_VERBOSE"))
-      println(s"GRAFT_STREAM stateParts=$stateParts mode=$mode " +
-        s"stagedBytes=$stagedBytes confParts=$confParts")
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    try {
-      val q = build(stream).writeStream
-        .format("memory").queryName(name).outputMode(mode).start()
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
+    // the width is set on a child session that owns the stream (and its
+    // memory-sink table), never on the caller's; the caller's stream
+    // listeners follow so its monitoring sees every progress event
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
+    s.streams.listListeners().foreach(ss.streams.addListener)
+    // 2 files per trigger over 4 staged files = 2 micro-batches: still a
+    // genuine multi-batch replay (state merge across batches exercised) at
+    // half the per-batch planning cost
+    // flush runs take one file per trigger so the two sentinel files land
+    // in SEPARATE micro-batches (watermark advance, then eviction)
+    val stream = ss.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", if (flush) "1" else "2").parquet(staged)
+    val q = build(stream).writeStream
+      .format("memory").queryName(name).outputMode(mode).start()
+    try q.processAllAvailable() finally q.stop()
+    ss.table(name)
   }
 
   private def fmtWin(c: String): org.apache.spark.sql.Column =

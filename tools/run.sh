@@ -2,7 +2,7 @@
 # Dev-loop runner: java directly against compiled classes (skip sbt startup).
 # Usage: tools/run.sh <mainClass> [args...]   e.g. tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/vout
 set -e
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.."
 MAIN=$1; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
