@@ -167,17 +167,23 @@ object Bench {
       System.gc()
       Thread.sleep(150)
     }
-    /** (seconds, ok, meanExternalCpuShare, loadavgBefore, loadavgAfter) */
+    /** (seconds, failure, meanExternalCpuShare, loadavgBefore,
+      * loadavgAfter); failure is `ExceptionClass: first line of message`,
+      * capped at 300 chars, and None when the query ran */
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
               sess: SparkSession = spark)
-        : (Double, Boolean, Double, Double, Double) = {
+        : (Double, Option[String], Double, Double, Double) = {
       val la0 = loadavg1()
       val sampler = new ExternalLoadSampler; sampler.start()
       val t0 = System.nanoTime()
-      val ok = try { fn(sess, sfDir).count(); true }
-               catch { case _: Throwable => false }
+      val failure =
+        try { fn(sess, sfDir).count(); None }
+        catch { case e: Throwable =>
+          val msg = Option(e.getMessage).getOrElse("").split("\n", 2)(0)
+          Some(s"${e.getClass.getName}: $msg".take(300))
+        }
       val secs = (System.nanoTime() - t0) / 1e9
-      (secs, ok, sampler.finish(), la0, loadavg1())
+      (secs, failure, sampler.finish(), la0, loadavg1())
     }
     // mean external share above 10% of the box during a query = co-running
     // work was eating cores we were charged for
@@ -187,9 +193,9 @@ object Bench {
     val firstPass = selected.flatMap { case (name, fn) =>
       (1 to repeat).map { i =>
         settle()
-        val (t, ok, ext, la0, la1) = timed(fn)
+        val (t, failure, ext, la0, la1) = timed(fn)
         val label = if (repeat == 1) name else s"$name#$i"
-        (label, name, t, ok, ext, la0, la1)
+        (label, name, t, failure, ext, la0, la1)
       }
     }
     // settled re-measurement, two triggers: (a) adjacency — in-catalog
@@ -200,9 +206,9 @@ object Bench {
     val fullCatalog = only.isEmpty && repeat == 1
     val rerunNames: Seq[String] =
       if (!fullCatalog)
-        firstPass.collect { case (_, n, _, true, ext, _, _) if ext > ContendedShare => n }.distinct
+        firstPass.collect { case (_, n, _, None, ext, _, _) if ext > ContendedShare => n }.distinct
       else
-        firstPass.collect { case (_, n, t, true, ext, _, _) if t >= 3.0 || ext > ContendedShare => n }.distinct
+        firstPass.collect { case (_, n, t, None, ext, _, _) if t >= 3.0 || ext > ContendedShare => n }.distinct
     // round-7 adjudication: one gc + 1 s before the re-runs reduced but did
     // not close the adjacency gap (driver settled values still ran ~3× the
     // isolated fresh-JVM probes). Deeper protocol: (a) three gc cycles with
@@ -218,14 +224,12 @@ object Bench {
     val rerunSession = spark.newSession()
     val rerun: Map[String, (Double, Double)] = rerunNames.map { name =>
       settle()
-      val (t1, ok1, ext1, _, _) = timed(SparkEntry.queries(name), rerunSession)
+      val (t1, f1, ext1, _, _) = timed(SparkEntry.queries(name), rerunSession)
       settle()
-      val (t2, ok2, ext2, _, _) = timed(SparkEntry.queries(name), rerunSession)
-      val c1 = if (ok1) t1 else Double.MaxValue
-      val c2 = if (ok2) t2 else Double.MaxValue
-      val (t, ok, ext) =
-        if (c1 <= c2) (t1, ok1, ext1) else (t2, ok2, ext2)
-      name -> ((if (ok) t else Double.MaxValue, ext))
+      val (t2, f2, ext2, _, _) = timed(SparkEntry.queries(name), rerunSession)
+      val c1 = if (f1.isEmpty) t1 else Double.MaxValue
+      val c2 = if (f2.isEmpty) t2 else Double.MaxValue
+      name -> (if (c1 <= c2) (c1, ext1) else (c2, ext2))
     }.toMap
     val contendedNames = firstPass.collect {
       case (_, n, _, _, ext, _, _) if ext > ContendedShare => n
@@ -258,8 +262,8 @@ object Bench {
         val ds = spark.newSession()
         val m = selected.map { case (name, fn) =>
           settle()
-          val (t, ok, _, _, _) = timed(fn, ds)
-          name -> (if (ok) t else Double.MaxValue)
+          val (t, failure, _, _, _) = timed(fn, ds)
+          name -> (if (failure.isEmpty) t else Double.MaxValue)
         }.toMap
         (m, Some(calibrate()))
       }
@@ -269,9 +273,9 @@ object Bench {
     // is unchanged, so cross-round total/calib_s stays comparable
     val calibS = (Seq(calibPre, calibPost) ++ calibFinal).sum /
       (2 + calibFinal.size)
-    val results = firstPass.map { case (label, name, t, ok, _, _, _) =>
+    val results = firstPass.map { case (label, name, t, failure, _, _, _) =>
       (label, Seq(Some(t), rerun.get(name).map(_._1),
-        driftMin.get(name)).flatten.min, ok)
+        driftMin.get(name)).flatten.min, failure.isEmpty)
     }
     // 4 decimals (0.1 ms): full double repr tripled the JSON line length
     def fmt(v: Double, dp: Int = 4): String = BigDecimal(v)
@@ -280,6 +284,11 @@ object Bench {
       .mkString("{", ",", "}")
     val errs = results.collect { case (k, _, false) => s"\"" + k + "\"" }
       .mkString("[", ",", "]")
+    // why each failed query failed (full artifact only; the summary line
+    // keeps just the `errors` names)
+    val errDetail = firstPass.collect { case (l, _, _, Some(f), _, _, _) =>
+      Verify.jsonString(l) + ":" + Verify.jsonString(f)
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val firsts = firstPass.map { case (l, _, t, _, _, _, _) => s"\"" + l + "\":" + fmt(t) }
       .mkString("{", ",", "}")
@@ -297,7 +306,7 @@ object Bench {
     val loadavgJson =
       s""","loadavg_pre":${fmt(loadavgPre, 2)}""" +
         s""","loadavg_post":${fmt(loadavgPost, 2)}"""
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib_s":${fmt(calibS)},"calib_pre":${fmt(calibPre)},"calib_post":${fmt(calibPost)}$calibFinalJson$driftJson$loadavgJson,"queries":$qs,"first_pass":$firsts,"load":$loads,"rerun":$reruns,"contended":$contended,"errors":$errs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib_s":${fmt(calibS)},"calib_pre":${fmt(calibPre)},"calib_post":${fmt(calibPost)}$calibFinalJson$driftJson$loadavgJson,"queries":$qs,"first_pass":$firsts,"load":$loads,"rerun":$reruns,"contended":$contended,"errors":$errs,"error_detail":$errDetail,"sf":"$sfDir"}"""
     // persist the full line where it survives any stdout truncation: /tmp
     // for adjudications, and — for an unrestricted full-catalog run only —
     // the repo cwd so the commit carries every per-query number into

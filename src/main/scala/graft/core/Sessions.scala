@@ -28,6 +28,11 @@ import org.apache.spark.sql.SparkSession
   *   - session start/await → `getOrCreate()` (synchronous in Spark — no
   *     RUNNING-poll loop needed); teardown → `stop()` (Spark cleans its own
   *     temp/shuffle dirs, the `.flink/<appId>` rmr analogue).
+  *   - graft's native SQL functions → `spark.sql.extensions` =
+  *     `graft.functions.GraftExtensions`, so they arrive with the session
+  *     and with every `newSession()` child of it; no engine code registers
+  *     them (`register` in `GraftFunctions` is the fallback for a session
+  *     built elsewhere).
   *
   * Cluster note (100 TB deployment): pass `master = "yarn"` (or k8s://…),
   * `executorMemMb`/`dynamicAllocation` from the submit wrapper; nothing
@@ -75,6 +80,8 @@ object Sessions {
       // events.ts is TIMESTAMP(NANOS) parquet; read as BIGINT nanos
       // (converted to µs timestamps in Tables.events)
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      // the native function table, in this session and its children
+      "spark.sql.extensions" -> "graft.functions.GraftExtensions",
       // reliable-checkpoint hygiene (Checkpoints.reliableKey): clean a
       // checkpoint's files once its RDD is GC'd, so iterative loops
       // don't grow the checkpoint dir by one dataset copy per round

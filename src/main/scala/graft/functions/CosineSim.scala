@@ -1,12 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+
+import scala.reflect.{ClassTag, classTag}
 
 /** Native Catalyst expression: cosine similarity of two float vectors,
   * accumulated in double (SURVEY §4.3 "custom pieces": a codegen'd scalar
@@ -120,242 +122,80 @@ case class DotProductF(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration of graft's native functions.
+/** Graft's native SQL functions: ONE table, installed two ways.
   *
-  * Two paths: `GraftExtensions` for `spark.sql.extensions`-configured
-  * sessions, and `GraftFunctions.register` for an already-built session
-  * (idempotent; the catalog queries call it so any driver session works).
+  * Every session built by `graft.core.Sessions.build` carries
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, so the functions
+  * arrive with the session and with every `newSession()` child of it —
+  * engine code never registers them. `register` is the idempotent fallback
+  * for a session the engine did not build (it reaches that session only,
+  * not its `newSession()` children).
   */
 object GraftFunctions {
-  private val cosineInfo = new ExpressionInfo(
-    classOf[CosineSim].getName, null, "cosine_sim",
-    "_FUNC_(a, b) - cosine similarity of two float arrays in double precision.",
-    "")
+  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private val dotInfo = new ExpressionInfo(
-    classOf[DotProductF].getName, null, "dot_f",
-    "_FUNC_(a, b) - dot product of two float arrays in double precision.", "")
+  // the builder is arity-checked, so a call like simhash64(a, b) fails
+  // analysis instead of silently dropping the extra argument
+  private def fn[T <: Expression: ClassTag](name: String, arity: Int, usage: String)(
+      make: Seq[Expression] => T): Entry =
+    (FunctionIdentifier(name),
+     new ExpressionInfo(classTag[T].runtimeClass.getName, null, name, usage, ""),
+     args => {
+       require(args.length == arity,
+         s"$name takes exactly $arity argument${if (arity == 1) "" else "s"}")
+       make(args)
+     })
 
-  private val simhashInfo = new ExpressionInfo(
-    classOf[SimHash64].getName, null, "simhash64",
-    "_FUNC_(tokens) - 64-bit SimHash of a string array.", "")
+  val table: Seq[Entry] = Seq(
+    fn("cosine_sim", 2,
+      "_FUNC_(a, b) - cosine similarity of two float arrays in double precision.")(
+      a => CosineSim(a(0), a(1))),
+    fn("dot_f", 2,
+      "_FUNC_(a, b) - dot product of two float arrays in double precision.")(
+      a => DotProductF(a(0), a(1))),
+    fn("simhash64", 1, "_FUNC_(tokens) - 64-bit SimHash of a string array.")(
+      a => SimHash64(a(0))),
+    fn("normalize_text", 1,
+      "_FUNC_(s) - NFC-normalize, strip diacritics, lowercase.")(
+      a => NormalizeText(a(0))),
+    fn("dot_i8", 2,
+      "_FUNC_(a, b) - integer dot product of two int arrays in long.")(
+      a => DotProductI8(a(0), a(1))),
+    fn("pq_encode", 2,
+      "_FUNC_(v, codebooks) - PQ sub-codes of a float vector (argmin-L2 per subspace).")(
+      a => PqEncode(a(0), a(1))),
+    fn("adc_score", 4,
+      "_FUNC_(qv, codes, codebooks, base) - asymmetric-distance PQ score.")(
+      a => AdcScore(a(0), a(1), a(2), a(3))),
+    fn("jaro_winkler", 2,
+      "_FUNC_(a, b) - Jaro-Winkler similarity of two strings (p=0.1, prefix cap 4).")(
+      a => JaroWinkler(a(0), a(1))),
+    fn("geohash", 3, "_FUNC_(lat, lon, precision) - base-32 geohash of a point.")(
+      a => GeohashEncode(a(0), a(1), a(2))),
+    fn("lcs_len", 2,
+      "_FUNC_(a, b) - longest-common-subsequence length of two string arrays.")(
+      a => LcsLen(a(0), a(1))),
+    fn("session_id", 2,
+      "_FUNC_(ts, gap) - window function: 1-based gap-rule session id.")(
+      a => GapSessionId(a(0), a(1))),
+    fn("char_ngrams", 2,
+      "_FUNC_(text, n) - generator: one row per character n-gram.")(
+      a => CharNgrams(a(0), a(1))),
+    fn("graft_bucket", 2,
+      "_FUNC_(s, n) - snapshot-log bucket id (FNV-1a+SplitMix64 mod n) as string.")(
+      a => GraftBucket(a(0), a(1))))
 
-  private val normInfo = new ExpressionInfo(
-    classOf[NormalizeText].getName, null, "normalize_text",
-    "_FUNC_(s) - NFC-normalize, strip diacritics, lowercase.", "")
-
-  private val dotI8Info = new ExpressionInfo(
-    classOf[DotProductI8].getName, null, "dot_i8",
-    "_FUNC_(a, b) - integer dot product of two int arrays in long.", "")
-
-  private val pqEncodeInfo = new ExpressionInfo(
-    classOf[PqEncode].getName, null, "pq_encode",
-    "_FUNC_(v, codebooks) - PQ sub-codes of a float vector (argmin-L2 per subspace).",
-    "")
-
-  private val adcScoreInfo = new ExpressionInfo(
-    classOf[AdcScore].getName, null, "adc_score",
-    "_FUNC_(qv, codes, codebooks, base) - asymmetric-distance PQ score.", "")
-
-  private val jwInfo = new ExpressionInfo(
-    classOf[JaroWinkler].getName, null, "jaro_winkler",
-    "_FUNC_(a, b) - Jaro-Winkler similarity of two strings (p=0.1, prefix cap 4).",
-    "")
-
-  private val geohashInfo = new ExpressionInfo(
-    classOf[GeohashEncode].getName, null, "geohash",
-    "_FUNC_(lat, lon, precision) - base-32 geohash of a point.", "")
-
-  private val lcsInfo = new ExpressionInfo(
-    classOf[LcsLen].getName, null, "lcs_len",
-    "_FUNC_(a, b) - longest-common-subsequence length of two string arrays.",
-    "")
-
-  private val sessionIdInfo = new ExpressionInfo(
-    classOf[GapSessionId].getName, null, "session_id",
-    "_FUNC_(ts, gap) - window function: 1-based gap-rule session id.", "")
-
-  private val charNgramsInfo = new ExpressionInfo(
-    classOf[CharNgrams].getName, null, "char_ngrams",
-    "_FUNC_(text, n) - generator: one row per character n-gram.", "")
-
-  private val bucketInfo = new ExpressionInfo(
-    classOf[GraftBucket].getName, null, "graft_bucket",
-    "_FUNC_(s, n) - snapshot-log bucket id (FNV-1a+SplitMix64 mod n) as string.",
-    "")
-
-  // ONE builder per function, arity-checked, shared by BOTH registration
-  // paths — register() and the spark.sql.extensions injector — so a wrong
-  // arity fails analysis identically however the session was configured
-  private[functions] val cosineBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "cosine_sim takes exactly 2 arguments")
-      CosineSim(args.head, args(1))
+  def register(spark: SparkSession): Unit =
+    table.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
-
-  private[functions] val dotBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "dot_f takes exactly 2 arguments")
-      DotProductF(args.head, args(1))
-    }
-
-  private[functions] val simhashBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 1, "simhash64 takes exactly 1 argument")
-      SimHash64(args.head)
-    }
-
-  private[functions] val normBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 1, "normalize_text takes exactly 1 argument")
-      NormalizeText(args.head)
-    }
-
-  private[functions] val dotI8Builder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "dot_i8 takes exactly 2 arguments")
-      DotProductI8(args.head, args(1))
-    }
-
-  private[functions] val pqEncodeBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "pq_encode takes exactly 2 arguments")
-      PqEncode(args.head, args(1))
-    }
-
-  private[functions] val adcScoreBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 4, "adc_score takes exactly 4 arguments")
-      AdcScore(args.head, args(1), args(2), args(3))
-    }
-
-  private[functions] val jwBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "jaro_winkler takes exactly 2 arguments")
-      JaroWinkler(args.head, args(1))
-    }
-
-  private[functions] val geohashBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 3, "geohash takes exactly 3 arguments")
-      GeohashEncode(args.head, args(1), args(2))
-    }
-
-  private[functions] val lcsBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "lcs_len takes exactly 2 arguments")
-      LcsLen(args.head, args(1))
-    }
-
-  private[functions] val sessionIdBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "session_id takes exactly 2 arguments")
-      GapSessionId(args.head, args(1))
-    }
-
-  private[functions] val charNgramsBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "char_ngrams takes exactly 2 arguments")
-      CharNgrams(args.head, args(1))
-    }
-
-  private[functions] val bucketBuilder: Seq[Expression] => Expression =
-    args => {
-      require(args.length == 2, "graft_bucket takes exactly 2 arguments")
-      GraftBucket(args.head, args(1))
-    }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash64"), simhashInfo, simhashBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("normalize_text"), normInfo, normBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"), cosineInfo, cosineBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_f"), dotInfo, dotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_i8"), dotI8Info, dotI8Builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pq_encode"), pqEncodeInfo, pqEncodeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("adc_score"), adcScoreInfo, adcScoreBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("jaro_winkler"), jwInfo, jwBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("geohash"), geohashInfo, geohashBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("lcs_len"), lcsInfo, lcsBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("session_id"), sessionIdInfo, sessionIdBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("char_ngrams"), charNgramsInfo, charNgramsBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bucket"), bucketInfo, bucketBuilder)
-  }
 }
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` injector:
-  * functions + optimizer rules. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    // the arity-checked builders are shared with GraftFunctions.register —
-    // without the checks a call like simhash64(a, b) resolved via the
-    // extension would silently drop the extra argument instead of failing
-    // analysis
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, null, "cosine_sim"),
-      GraftFunctions.cosineBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_f"),
-      new ExpressionInfo(classOf[DotProductF].getName, null, "dot_f"),
-      GraftFunctions.dotBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, null, "simhash64"),
-      GraftFunctions.simhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, null, "normalize_text"),
-      GraftFunctions.normBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dot_i8"),
-      new ExpressionInfo(classOf[DotProductI8].getName, null, "dot_i8"),
-      GraftFunctions.dotI8Builder))
-    ext.injectFunction((
-      FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, null, "pq_encode"),
-      GraftFunctions.pqEncodeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("adc_score"),
-      new ExpressionInfo(classOf[AdcScore].getName, null, "adc_score"),
-      GraftFunctions.adcScoreBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, null, "jaro_winkler"),
-      GraftFunctions.jwBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("geohash"),
-      new ExpressionInfo(classOf[GeohashEncode].getName, null, "geohash"),
-      GraftFunctions.geohashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("lcs_len"),
-      new ExpressionInfo(classOf[LcsLen].getName, null, "lcs_len"),
-      GraftFunctions.lcsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("session_id"),
-      new ExpressionInfo(classOf[GapSessionId].getName, null, "session_id"),
-      GraftFunctions.sessionIdBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[CharNgrams].getName, null, "char_ngrams"),
-      GraftFunctions.charNgramsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bucket"),
-      new ExpressionInfo(classOf[GraftBucket].getName, null, "graft_bucket"),
-      GraftFunctions.bucketBuilder))
-    ext.injectOptimizerRule(_ => graft.plans.SimplifySelfSimilarity)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-  }
+/** `spark.sql.extensions=graft.functions.GraftExtensions` (set by
+  * `Sessions.sparkConf`): injects the function table and nothing else. The
+  * optimizer rule and the top-k strategy stay opt-in per session
+  * (`Rules.register`, `TopK.install`). */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach(ext.injectFunction)
 }

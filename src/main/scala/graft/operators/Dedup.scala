@@ -178,7 +178,6 @@ object Dedup {
     * the token UTF8Strings in place (the former Scala UDF paid a
     * CatalystTypeConverters round-trip per document). */
   def simhash(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("simhash64", split(col("text"), " ")).as("simhash"))
   }
@@ -248,7 +247,6 @@ object Dedup {
     * shape). Expects (vec_id, embedding array<float>). */
   def embeddingNearDup(embeddings: DataFrame, threshold: Double = 0.95,
                        dim: Int = 64, nPlanes: Int = 8, tables: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // ids-first: the cross-table dedup (distinct) shuffles only (d1, d2)
     // id pairs; the embeddings are re-attached afterwards — at bucket sizes
     // worth having, shuffling vectors through the distinct dominates cost.
@@ -290,7 +288,6 @@ object Dedup {
     * give every vector a dedup decision (cluster-complete coverage). */
   def semanticDedup(embeddings: DataFrame, threshold: Double = 0.95,
                     nClusters: Int = 8, iters: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cents = Ivf.trainCentroids(embeddings, nClusters, iters)
     val assigned = Ivf.assign(embeddings, cents) // (cid, vid, cv)
     val drops = assigned.as("a").join(assigned.as("b"),

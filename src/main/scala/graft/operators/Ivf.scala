@@ -33,9 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Ivf {
 
-  private def registered(df: DataFrame): Unit =
-    graft.functions.GraftFunctions.register(df.sparkSession)
-
   /** Unit-normalize each centroid so argmax dot ≡ argmax cosine. */
   private def normalize(cs: Array[Array[Float]]): Array[Array[Float]] =
     cs.map { c =>
@@ -107,7 +104,6 @@ object Ivf {
   def trainCentroids(candidates: DataFrame, nCentroids: Int, iters: Int = 2,
                      maxTrainRows: Long = 1L << 16,
                      knownCount: Option[Long] = None): Array[Array[Float]] = {
-    registered(candidates)
     require(maxTrainRows >= nCentroids,
       s"maxTrainRows=$maxTrainRows < nCentroids=$nCentroids")
     val sample = trainingSample(candidates, maxTrainRows, knownCount).cache()
@@ -141,7 +137,6 @@ object Ivf {
   /** Inverted-list assignment: (cid, vid, cv) — the stored IVF layout. At
     * scale this is the table to persist `partitionBy("cid")`. */
   def assign(candidates: DataFrame, cents: Array[Array[Float]]): DataFrame = {
-    registered(candidates)
     // spread only when scan parallelism is deficient (single-file fixtures);
     // a corpus-scale scan already has the splits and must NOT be shuffled
     graft.core.Tables.spread(candidates, col("vec_id"))
@@ -154,7 +149,6 @@ object Ivf {
   private def probeTopK(queries: DataFrame, assigned: DataFrame,
                         cents: Array[Array[Float]], k: Int,
                         nProbe: Int): DataFrame = {
-    registered(queries)
     val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"),
       explode(probeCentroids(col("embedding"), cents, nProbe)).as("cid"))
     // each candidate lives in exactly one list and probe cids are distinct,
@@ -200,7 +194,6 @@ object Ivf {
   def ivfTopKStored(queries: DataFrame, listsPath: String,
                     cents: Array[Array[Float]], k: Int,
                     nProbe: Int = 4): DataFrame = {
-    registered(queries)
     val spark = queries.sparkSession
     import spark.implicits._
     val probeCids = queries

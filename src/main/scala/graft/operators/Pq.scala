@@ -33,9 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
-  private def registered(df: DataFrame): Unit =
-    graft.functions.GraftFunctions.register(df.sparkSession)
-
   /** Per-subspace codebooks: `codebooks(j)(k)` is the k-th sub-centroid of
     * subspace j (each of length dim/m). */
   final case class PqModel(codebooks: Array[Array[Array[Float]]]) {
@@ -70,7 +67,6 @@ object Pq {
   def train(candidates: DataFrame, dim: Int, m: Int = 8, ksub: Int = 16,
             iters: Int = 2, maxTrainRows: Long = 1L << 16,
             knownCount: Option[Long] = None): PqModel = {
-    registered(candidates)
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
     val dsub = dim / m
     // spread: the bounded sample off a single-file scan would otherwise
@@ -120,7 +116,6 @@ object Pq {
     * loop — this is the table that replaces the raw vectors at rest
     * (m bytes/vector at ksub ≤ 256). */
   def encode(vecs: DataFrame, model: PqModel): DataFrame = {
-    registered(vecs)
     graft.core.Tables.spread(vecs, col("vec_id"))
       .select(col("vec_id"),
         codesColumn(col("embedding"), model.codebooks).as("codes"))
@@ -159,7 +154,6 @@ object Pq {
                 residual: Boolean = false,
                 maxTrainRows: Long = 1L << 16,
                 knownCount: Option[Long] = None): DataFrame = {
-    registered(queries)
     val n = Some(knownCount.getOrElse(candidates.count()))
     val cents = Ivf.trainCentroids(candidates, nCentroids, iters,
       maxTrainRows, n)
@@ -208,7 +202,6 @@ object Pq {
     * residual variant stays an in-memory option of [[ivfPqTopK]]). */
   def assignAndEncode(candidates: DataFrame, cents: Array[Array[Float]],
                       model: PqModel): DataFrame = {
-    registered(candidates)
     graft.core.Tables.spread(candidates, col("vec_id"))
       .select(Ivf.nearestCentroid(col("embedding"), cents).as("cid"),
         col("vec_id").as("vid"),
@@ -237,7 +230,6 @@ object Pq {
   def ivfPqTopKStored(queries: DataFrame, codesPath: String,
                       cents: Array[Array[Float]], model: PqModel, k: Int,
                       nProbe: Int = 8): DataFrame = {
-    registered(queries)
     val spark = queries.sparkSession
     import spark.implicits._
     val probeCids = queries
@@ -267,7 +259,6 @@ object Pq {
     * broadcast; candidates stream through one codegen'd projection. */
   def adcTopK(queries: DataFrame, codes: DataFrame, model: PqModel,
               k: Int): DataFrame = {
-    registered(queries)
     val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
     // native ADC expression — one generated loop per (query, candidate)
     val adc = call_function("adc_score", col("qv"), col("codes"),

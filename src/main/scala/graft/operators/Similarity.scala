@@ -38,11 +38,8 @@ object Similarity {
   /** Native codegen'd cosine (graft.functions.CosineSim) — bit-compatible
     * with `cosine` but with no intermediate array allocations; used on the
     * hot scoring paths. Requires float-array inputs. */
-  private def nativeCosine(spark: org.apache.spark.sql.SparkSession,
-                           a: String, b: String): Column = {
-    graft.functions.GraftFunctions.register(spark)
+  private def nativeCosine(a: String, b: String): Column =
     expr(s"cosine_sim($a, $b)")
-  }
 
   /** Exact top-k cosine neighbors for each query vector.
     * queries/candidates: (vec_id, embedding). Returns (qid, rn, vid, cos). */
@@ -56,7 +53,6 @@ object Similarity {
     val c = graft.core.Tables.spread(candidates, col("vec_id"))
       .select(col("vec_id").as("vid"), col("embedding").as("cv"),
       l2Norm(col("embedding")).as("cn"))
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // native dot + precomputed norms: O(q+n) norm work, one codegen'd loop
     // per pair, zero intermediate arrays
     val scored = broadcast(q).crossJoin(c)
@@ -77,7 +73,6 @@ object Similarity {
     * exchange reuse sharing that shuffle between the two sides. */
   private[operators] def hyperplaneBuckets(df: DataFrame, dim: Int,
                                            nPlanes: Int, tables: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col("vec_id"),
       posexplode(array((0 until tables).map(t =>
         hyperplaneSig(col("embedding"), dim, nPlanes, t * nPlanes)): _*))
@@ -87,8 +82,8 @@ object Similarity {
   /** Deterministic random hyperplane signature: plane p of table t has
     * components mix64((planeOffset+p)·dim + j) scaled to [-1, 1); the sign
     * bits pack into one int bucket id. Projections run through the native
-    * dot_f expression (caller must have registered GraftFunctions) — one
-    * codegen'd loop per plane instead of a zip_with/aggregate HOF chain. */
+    * dot_f expression — one codegen'd loop per plane instead of a
+    * zip_with/aggregate HOF chain. */
   private def hyperplaneSig(v: Column, dim: Int, nPlanes: Int,
                             planeOffset: Int): Column = {
     val comps: Seq[Column] = (0 until nPlanes).map { p =>
@@ -106,7 +101,6 @@ object Similarity {
     * unioned before scoring (multi-table raises recall). */
   def lshTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               dim: Int = 64, nPlanes: Int = 4, tables: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // spread only when scan parallelism is deficient (no-op at corpus scale)
     val cand = graft.core.Tables.spread(candidates, col("vec_id"))
     // ids-first (see Dedup.embeddingNearDup): the cross-table distinct
@@ -127,7 +121,7 @@ object Similarity {
       .join(broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))), "qid")
       .join(cand.select(col("vec_id").as("vid"), col("embedding").as("cv")), "vid")
       .select(col("qid"), col("vid"),
-        round(nativeCosine(queries.sparkSession, "qv", "cv"), 4).as("cos"))
+        round(nativeCosine("qv", "cv"), 4).as("cos"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("vid").asc)
     scored.withColumn("rn", row_number().over(w))
@@ -176,7 +170,6 @@ object Similarity {
     * property (SimilaritySpec), not a guarantee — quantization perturbs
     * near-ties. */
   def int8TopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = quantizeInt8(queries)
       .select(col("vec_id").as("qid"), col("codes").as("qc"), col("scale").as("qs"))
     val c = quantizeInt8(graft.core.Tables.spread(candidates, col("vec_id")))
@@ -247,7 +240,6 @@ object Similarity {
                    k: Int = 5): DataFrame = {
     require(k >= 1 && poolSize >= k && coarseDims >= 1,
       s"k=$k poolSize=$poolSize coarseDims=$coarseDims")
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"),
       l2Norm(col("embedding")).as("qn"),
       l2Norm(slice(col("embedding"), 1, coarseDims)).as("qnc"))

@@ -974,7 +974,6 @@ final class SnapshotTable(spark: SparkSession, root: String, keyCol: String) {
       cmap0: Map[String, String])
       : Seq[(String, Map[String, String], Seq[FileStat])] = {
     require(specs.nonEmpty, "partitionBy must name at least one column")
-    graft.functions.GraftFunctions.register(spark) // graft_bucket (idempotent)
     val ts = specs.map(PTransform.parse)
     require(ts.map(_.spec).distinct == ts.map(_.spec),
       s"duplicate partition spec in $specs")
@@ -1171,7 +1170,6 @@ final class SnapshotTable(spark: SparkSession, root: String, keyCol: String) {
     val v = if (version < 0) latest else version
     require(v >= 1 && v <= latest,
       s"version $v out of range [1, $latest] for $root")
-    graft.functions.GraftFunctions.register(spark) // graft_bucket (idempotent)
     val e = readEntry(v)
     // probes arrive under LOGICAL source names; pvals are keyed by the
     // rename-invariant PHYSICAL spec (round 16 — partition sources may

@@ -21,8 +21,7 @@ object WebOps {
   /** Canonicalize a text column: NFC + strip diacritics + lowercase
     * (native [[graft.functions.NormalizeText]]) then collapse runs of
     * whitespace and trim. Map-only, whole-stage codegen. */
-  def canonical(spark: org.apache.spark.sql.SparkSession, c: Column): Column = {
-    graft.functions.GraftFunctions.register(spark)
+  def canonical(c: Column): Column = {
     // call_function resolves through the registry so arity/type checks
     // stay in one place (same route as the SQL surface)
     trim(regexp_replace(call_function("normalize_text", c), "\\s+", " "))

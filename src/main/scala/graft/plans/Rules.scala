@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
 
 /** Catalyst optimizer rules for graft's native expressions (SURVEY §4.3 —
-  * the `Rule[LogicalPlan]` surface; injected via GraftExtensions or
-  * `Rules.register(spark)`).
+  * the `Rule[LogicalPlan]` surface; opt-in per session through
+  * `Rules.register(spark)`, never installed by `GraftExtensions`).
   *
   * `SimplifySelfSimilarity`: `cosine_sim(x, x)` evaluates d/(√d·√d) with
   * d = Σx² — mathematically 1 for any finite non-zero vector, but in FP the

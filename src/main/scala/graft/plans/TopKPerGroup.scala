@@ -58,26 +58,19 @@ import org.apache.spark.sql.types.IntegerType
   * equality, the same invariant the hash map relies on). A workload
   * whose group keys are near-unique per row degrades to roughly an
   * external sort-merge — the default spillable WindowExec plan is then
-  * no better, but `spark.graft.topk.enabled=false` restores it if
-  * wanted — the strategy is injected by GraftExtensions but GATED on
-  * that conf (default true), so opting out is a session conf, not a
-  * rebuild.
+  * no better. The strategy is opt-in per session (`TopK.install`); a
+  * session that does not install it keeps that default plan.
   */
 object TopKPerGroupStrategy extends SparkStrategy {
 
-  val enabledKey = "spark.graft.topk.enabled"
   val maxGroupsKey = "spark.graft.topk.maxGroupsPerPartition"
-
-  private def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(enabledKey, "true").toBoolean
 
   private def maxGroups: Int =
     org.apache.spark.sql.internal.SQLConf.get
       .getConfString(maxGroupsKey, (1 << 20).toString).toInt
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case f: LogicalFilter if enabled && f.child.isInstanceOf[LogicalWindow] =>
+    case f: LogicalFilter if f.child.isInstanceOf[LogicalWindow] =>
       val w = f.child.asInstanceOf[LogicalWindow]
       (w.windowExpressions, w.partitionSpec, w.orderSpec) match {
         case (Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)), part, order)
@@ -470,9 +463,10 @@ object TopKPerGroupExec {
   }
 }
 
-/** Idempotent per-session installer (the `experimental.extraStrategies`
-  * path, for sessions built without `spark.sql.extensions`; GraftExtensions
-  * injects the same strategy at build time). */
+/** Idempotent per-session installer (`experimental.extraStrategies`): the
+  * only way the strategy reaches a session. `GraftExtensions` injects
+  * functions only, so engine sessions plan the default window operators
+  * unless a caller installs this on its own child session. */
 object TopK {
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies

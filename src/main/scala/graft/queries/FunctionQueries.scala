@@ -21,7 +21,6 @@ object FunctionQueries {
     // rows stream out of GenerateExec with no per-document n-gram array
     // materialization; hash-exact vs the oracle's list_transform unnest
     "q_fn_ngram_gen" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(expr("char_ngrams(text, 3)").as("gram"))
         .groupBy(col("gram")).agg(count(lit(1)).as("n"))

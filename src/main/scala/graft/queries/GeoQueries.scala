@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.core.{Q, Tables}
-import graft.functions.GraftFunctions
 import graft.operators.Geo
 import org.apache.spark.sql.functions._
 
@@ -78,7 +77,6 @@ object GeoQueries {
     // integer bit math (see geohashSql below); GeoSpec additionally pins
     // the published vectors and the prefix-containment law.
     "q_geo_geohash" -> ((s, d) => {
-      GraftFunctions.register(s)
       customerPoints(s, d)
         .select(col("id"),
           expr("geohash(lat, lon, 6)").as("gh6"),

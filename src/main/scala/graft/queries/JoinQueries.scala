@@ -224,7 +224,6 @@ object JoinQueries {
     // makes the candidate set Σ_block |b|², never names² — at corpus
     // scale the block key is the same role the LSH band plays for minhash
     "q_join_jw" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val names = Tables.part(s, d).select(col("p_name")).distinct()
         .select(col("p_name").as("name"),
           split(col("p_name"), " ").getItem(0).as("blk"))

@@ -823,7 +823,6 @@ object LlmQueries {
     // matches of P[k-1]+1), computable with one window). StringSimSpec
     // additionally pins the DP on textbook vectors.
     "q_llm_rouge" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d).select(col("doc_id"),
         expr("slice(filter(split(text, ' '), t -> t <> ''), 1, 200)")
           .as("toks"))

@@ -34,7 +34,7 @@ object WebQueries {
           when(col("doc_id") % 3 === 0, concat(lit(garnish), col("text")))
             .otherwise(concat(lit("  "), col("text"), lit("   "))))
       docs.select(col("doc_id"),
-          WebOps.canonical(s, col("text")).as("norm"))
+          WebOps.canonical(col("text")).as("norm"))
         .withColumn("n_chars_norm", length(col("norm")))
         .orderBy(col("doc_id"))
     }),

@@ -159,7 +159,6 @@ object WindowQueries {
     // oracle text as q_win_session: the driver hash-checks the custom
     // window function row-for-row against the declarative spelling.
     "q_win_session_native" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.events(s, d)
         .withColumn("epoch", col("ts").cast("long"))
         .withColumn("sess",

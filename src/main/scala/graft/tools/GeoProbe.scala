@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.Sessions
 import graft.operators.Geo
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only hot-cell probe for the geo radius join — not part of the
@@ -17,17 +17,12 @@ object GeoProbe {
     val nHot = args.headOption.map(_.toInt).getOrElse(60000)
     val nBg = args.drop(1).headOption.map(_.toInt).getOrElse(60000)
     val salt = args.drop(2).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Sessions.build(Sessions.Conf(
+      master = "local[32]", appName = "geo-probe", numTasks = 32,
       // at corpus scale NEITHER side broadcasts — the join shuffles on the
       // cell key (SMJ/shuffled-hash). Reproduce that plan here, else the
       // tiny fixture broadcasts the home side and no cell skew exists.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      extra = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")))
     // city fixture: nHot points spread over ONE full 1°×1° cell, nBg over
     // a 40°×40° band. The hot cell's candidate product (nHot² pairs) all
     // lands in one shuffle partition whose INPUT is tiny (nHot rows), so

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.core.Tables
+import graft.core.{Sessions, Tables}
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only stage-timing probe for the dedup-clusters pipeline — not part of
@@ -10,13 +9,8 @@ import org.apache.spark.sql.functions._
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(
+      Sessions.Conf(master = "local[32]", appName = "probe", numTasks = 32))
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"PROBE $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r

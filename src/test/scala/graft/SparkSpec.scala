@@ -1,21 +1,17 @@
 package graft
 
+import graft.core.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * local mode is expensive to boot, and the specs only read).
+  * local mode is expensive to boot, and the specs only read), built by the
+  * engine's own factory so tests run the same conf and functions as
+  * Bench and Verify.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.build(
+    Sessions.Conf(master = "local[4]", appName = "graft-test", numTasks = 4))
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"

@@ -10,7 +10,6 @@ class BucketHashSpec extends SparkSpec {
   import s0.implicits._
 
   test("graft_bucket: codegen expression ≡ driver twin, no ScalaUDF, in WSCG") {
-    GraftFunctions.register(spark)
     val df = (1L to 2000L).toDF("id").withColumn("b",
       call_function("graft_bucket", col("id").cast("string"), lit(16)))
     // bit-identical to the driver-side probe twin for every row
@@ -29,7 +28,6 @@ class BucketHashSpec extends SparkSpec {
   }
 
   test("graft_bucket rejects non-positive bucket counts at analysis") {
-    GraftFunctions.register(spark)
     // n = 0 must be an analysis-time refusal, not an ArithmeticException
     // thrown from generated code; n < 0 likewise (negative bucket-id
     // strings could never match logged pvals)
@@ -50,7 +48,6 @@ class BucketHashSpec extends SparkSpec {
   }
 
   test("partition derive plan carries no ScalaUDF and stays codegen") {
-    GraftFunctions.register(spark)
     val c = PTransform.parse("bucket(8,id)").derivedExpr(LongType)
     val proj = spark.range(1, 101).toDF("id").withColumn("gb", c)
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF

@@ -17,7 +17,6 @@ class CosineSimSpec extends SparkSpec {
 
   test("cosine_sim is bit-identical to the higher-order formulation") {
     val s = spark
-    GraftFunctions.register(s)
     val emb = Tables.embeddings(s, sf0001).limit(50)
       .select(col("embedding").as("a"))
       .crossJoin(Tables.embeddings(s, sf0001).limit(5)
@@ -31,7 +30,6 @@ class CosineSimSpec extends SparkSpec {
   test("dot_f matches sequential double accumulation and handles nulls") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (Array(0.5f, -0.5f), Array(2.0f, 2.0f))
@@ -46,7 +44,6 @@ class CosineSimSpec extends SparkSpec {
 
   test("native expressions execute inside whole-stage codegen") {
     val s = spark
-    GraftFunctions.register(s)
     val df = Tables.embeddings(s, sf0001)
       .select(expr("cosine_sim(embedding, embedding)").as("c"))
     df.collect()
@@ -59,24 +56,54 @@ class CosineSimSpec extends SparkSpec {
     assert(selfSim.forall(v => math.abs(v - 1.0) < 1e-9))
   }
 
-  test("extension class registers via spark.sql.extensions contract") {
-    val ext = new GraftExtensions
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    ext.apply(exts) // must not throw; function injection is exercised above
+  test("engine sessions carry the function table and no planner extras") {
+    // a newSession() child of the engine's session: the extension reaches
+    // it, where a register() on the parent would not
+    val child = spark.newSession()
+    def usage(s: org.apache.spark.sql.SparkSession, name: String): String =
+      s.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
+        .find(_.startsWith("Usage:")).getOrElse("")
+    def resolvesAll(s: org.apache.spark.sql.SparkSession): Unit =
+      for ((id, info, _) <- GraftFunctions.table) {
+        val name = id.funcName
+        assert(s.catalog.functionExists(name), s"$name does not resolve")
+        assert(usage(s, name) ==
+          s"Usage: ${info.getUsage.replace("_FUNC_", name)}", name)
+      }
+    assert(GraftFunctions.table.size == 13)
+    resolvesAll(child)
+    // the fallback path over an extension-built session changes nothing
+    GraftFunctions.register(child)
+    resolvesAll(child)
+    // the extension injects functions only: the top-k strategy and the
+    // self-similarity rule stay off unless a session opts in
+    def strategies(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.planner.strategies
+    def rules(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.optimizer.batches.flatMap(_.rules)
+    assert(!strategies(child).contains(graft.plans.TopKPerGroupStrategy))
+    assert(!rules(child).contains(graft.plans.SimplifySelfSimilarity))
+    // and the probes see them once a session does opt in
+    val optedIn = spark.newSession()
+    graft.plans.TopK.install(optedIn)
+    graft.plans.Rules.register(optedIn)
+    assert(strategies(optedIn).contains(graft.plans.TopKPerGroupStrategy))
+    assert(rules(optedIn).contains(graft.plans.SimplifySelfSimilarity))
   }
 
   test("function builders reject wrong arity on both registration paths") {
-    // the SAME builders back register() and the extensions injector, so
-    // pinning them here covers simhash64(a, b) resolved either way
+    // the SAME table backs register() and the extensions injector, so
+    // pinning its builders here covers simhash64(a, b) resolved either way
+    def builder(name: String) =
+      GraftFunctions.table.find(_._1.funcName == name).get._3
     import org.apache.spark.sql.catalyst.expressions.Literal
     val one = Seq[org.apache.spark.sql.catalyst.expressions.Expression](
       Literal(1))
     val two = one ++ one
-    intercept[IllegalArgumentException](GraftFunctions.simhashBuilder(two))
-    intercept[IllegalArgumentException](GraftFunctions.cosineBuilder(one))
-    intercept[IllegalArgumentException](GraftFunctions.dotBuilder(one ++ two))
+    intercept[IllegalArgumentException](builder("simhash64")(two))
+    intercept[IllegalArgumentException](builder("cosine_sim")(one))
+    intercept[IllegalArgumentException](builder("dot_f")(one ++ two))
     // and a registry-resolved wrong-arity call fails analysis loudly
-    GraftFunctions.register(spark)
     val err = intercept[Exception](
       spark.sql("SELECT simhash64(array('a'), array('b'))").collect())
     assert(err.getMessage.contains("simhash64 takes exactly 1 argument"),

@@ -49,7 +49,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("jaro_winkler expression: codegen and interpreted agree on fixtures") {
-    GraftFunctions.register(spark)
     val names = spark.read.parquet(s"$sf001/part.parquet")
       .select(col("p_name")).distinct().limit(40)
     val pairs = names.as("a").crossJoin(names.as("b"))
@@ -73,7 +72,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("lcs_len: textbook DP cases, empties, codegen path") {
-    GraftFunctions.register(spark)
     def lcs(a: String, b: String): Int = spark.sql(
       s"SELECT lcs_len(split('$a', ' '), split('$b', ' ')) AS v")
       .head().getInt(0)
@@ -92,7 +90,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("char_ngrams generator: goldens, edge cases, explode equivalence") {
-    GraftFunctions.register(spark)
     def grams(s: String, n: Int): Seq[String] = spark.sql(
       s"SELECT char_ngrams('$s', $n) AS gram").collect()
       .map(_.getString(0)).toSeq
@@ -118,7 +115,6 @@ class StringSimSpec extends SparkSpec {
   }
 
   test("geohash prefix law: lower precision is a strict prefix") {
-    GraftFunctions.register(spark)
     val pts = spark.range(1, 400).select(
       (col("id") * 7919 % 12000 / lit(100.0) - 60.0).as("lat"),
       (col("id") * 104729 % 36000 / lit(100.0) - 180.0).as("lon"))

@@ -24,7 +24,6 @@ class TextNormSpec extends SparkSpec {
     "Café"               -> "cafe")
 
   test("normalize_text matches the DuckDB strip_accents oracle char-for-char") {
-    GraftFunctions.register(spark)
     val df = spark.createDataFrame(
       golden.map { case (in, _) => org.apache.spark.sql.Row(in) }.asJava,
       org.apache.spark.sql.types.StructType(Seq(
@@ -35,7 +34,6 @@ class TextNormSpec extends SparkSpec {
   }
 
   test("normalize_text is idempotent") {
-    GraftFunctions.register(spark)
     val s0 = spark; import s0.implicits._
     val once = golden.map(_._1).toDF("s")
       .select(call_function("normalize_text", col("s")).as("n"))
@@ -46,7 +44,6 @@ class TextNormSpec extends SparkSpec {
   test("interpreted eval matches codegen") {
     // eval path exercised directly on the static helper; codegen path via
     // a DataFrame projection (local[4] runs whole-stage codegen)
-    GraftFunctions.register(spark)
     val s0 = spark; import s0.implicits._
     val inputs = golden.map(_._1) ++ Seq("MIXED Case ASCII", "   spaces  ")
     val viaEval = inputs.map(s =>

@@ -12,7 +12,6 @@ class WindowFnsSpec extends SparkSpec {
   test("session_id: gap rule boundaries, 1-based ids, per-user isolation") {
     val s = spark
     import s.implicits._
-    GraftFunctions.register(s)
     // user 1: 0, 1800 (exactly gap → same session), 3601 (1801 later →
     // NEW session), 3602; user 2: single event → session 1
     val df = Seq(
@@ -31,7 +30,6 @@ class WindowFnsSpec extends SparkSpec {
 
   test("session_id equals the lag+cumsum spelling on fixture events") {
     val s = spark
-    GraftFunctions.register(s)
     val ev = graft.core.Tables.events(s, sf001)
       .withColumn("epoch", col("ts").cast("long"))
     val w = Window.partitionBy(col("user_id"))

@@ -146,7 +146,6 @@ class PqSpec extends SparkSpec {
     // the generated-loop expressions replaced a transform/aggregate HOF
     // nest (CodegenFallback); this pins exact score/code parity against
     // that formulation rebuilt here, so the swap can never drift
-    graft.functions.GraftFunctions.register(spark)
     val m = model.m; val ksub = model.ksub; val dsub = model.dsub
     val mat = typedLit(model.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     val half = typedLit(model.codebooks.map(_.map(c =>

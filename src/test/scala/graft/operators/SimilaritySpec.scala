@@ -165,7 +165,6 @@ class SimilaritySpec extends SparkSpec {
     // compare against the float DOT ranking (int8TopK approximates the
     // dot, not the cosine): norms differ per candidate, so rank by
     // descaled dot on both sides
-    graft.functions.GraftFunctions.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("vid").asc)
     val exact = q.select(col("vec_id").as("qid"), col("embedding").as("qv"))
@@ -184,7 +183,6 @@ class SimilaritySpec extends SparkSpec {
   test("int8 top-k score approximates the true dot within the quantization bound") {
     val emb = Tables.embeddings(spark, sf0001)
     val q = emb.where(col("vec_id") < 5)
-    graft.functions.GraftFunctions.register(spark)
     val truth = q.select(col("vec_id").as("qid"), col("embedding").as("qv"))
       .crossJoin(emb.select(col("vec_id").as("vid"), col("embedding").as("cv")))
       .select(col("qid"), col("vid"), expr("dot_f(qv, cv)").as("t"))

@@ -2,14 +2,14 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.core.Tables
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
+/** The rule is opt-in per session, so each test installs it on its own
+  * child session and the shared one never plans with it. */
 class RulesSpec extends SparkSpec {
 
   test("cosine_sim(x, x) folds to a literal for non-nullable x") {
-    val s = spark
-    GraftFunctions.register(s)
+    val s = spark.newSession()
     Rules.register(s)
     val df = Tables.embeddings(s, sf0001)
       .select(coalesce(col("embedding"),
@@ -21,8 +21,7 @@ class RulesSpec extends SparkSpec {
   }
 
   test("nullable input is NOT folded (null propagation preserved)") {
-    val s = spark
-    GraftFunctions.register(s)
+    val s = spark.newSession()
     Rules.register(s)
     val df = Tables.embeddings(s, sf0001)
       .select(expr("cosine_sim(embedding, embedding)").as("c"))
@@ -31,8 +30,7 @@ class RulesSpec extends SparkSpec {
   }
 
   test("zero-norm and empty vectors still return NaN after the fold") {
-    val s = spark
-    GraftFunctions.register(s)
+    val s = spark.newSession()
     Rules.register(s)
     // parquet-backed input (a local Seq would be constant-folded by
     // ConvertToLocalRelation before the rule could ever fire); zero and
@@ -65,9 +63,8 @@ class RulesSpec extends SparkSpec {
   }
 
   test("distinct vectors are untouched by the rule") {
-    val s = spark
+    val s = spark.newSession()
     import s.implicits._
-    GraftFunctions.register(s)
     Rules.register(s)
     val df = Seq((Array(1.0f, 0.0f), Array(0.0f, 1.0f))).toDF("a", "b")
       .select(expr("cosine_sim(a, b)").as("c"))
@@ -75,9 +72,8 @@ class RulesSpec extends SparkSpec {
   }
 
   test("jaro_winkler(x, x) folds to 1.0; lcs_len(x, x) folds to size") {
-    val s = spark
+    val s = spark.newSession()
     import s.implicits._
-    GraftFunctions.register(s)
     Rules.register(s)
     val df = Seq(("hello world", "the cat sat on the mat"))
       .toDF("a", "b")

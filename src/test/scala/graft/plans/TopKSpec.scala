@@ -86,16 +86,6 @@ class TopKSpec extends SparkSpec {
       .contains("TopKPerGroupExec"))
   }
 
-  test("spark.graft.topk.enabled=false restores the default window plan") {
-    val s2 = session()
-    s2.conf.set(TopKPerGroupStrategy.enabledKey, "false")
-    try {
-      val plan = topkQuery(s2, 3).queryExecution.executedPlan.toString
-      assert(!plan.contains("TopKPerGroupExec"), plan.take(2000))
-      assert(plan.contains("Window"), "default spillable plan expected")
-    } finally s2.conf.unset(TopKPerGroupStrategy.enabledKey)
-  }
-
   test("partial phase flushes at maxGroupsPerPartition and stays exact") {
     val s2 = session()
     // ~1500 distinct custkeys per map partition; bound 400 forces map-side
