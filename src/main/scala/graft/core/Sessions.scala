@@ -33,6 +33,11 @@ import org.apache.spark.sql.SparkSession
   *     and with every `newSession()` child of it; no engine code registers
   *     them (`register` in `GraftFunctions` is the fallback for a session
   *     built elsewhere).
+  *   - the path-addressed snapshot-log catalog → `spark.sql.catalog
+  *     .graftsnap` = `graft.sources.SnaplogCatalog`, so the SQL-native
+  *     snapshot queries address `graftsnap.`/path`` without writing conf
+  *     (the name-addressed `graftwh` catalog stays with its queries: its
+  *     warehouse path needs the application id, unknown before the build).
   *
   * Cluster note (100 TB deployment): pass `master = "yarn"` (or k8s://…),
   * `executorMemMb`/`dynamicAllocation` from the submit wrapper; nothing
@@ -82,6 +87,8 @@ object Sessions {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // the native function table, in this session and its children
       "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+      // path-addressed snapshot-log tables in SQL text (stateless plugin)
+      "spark.sql.catalog.graftsnap" -> "graft.sources.SnaplogCatalog",
       // reliable-checkpoint hygiene (Checkpoints.reliableKey): clean a
       // checkpoint's files once its RDD is GC'd, so iterative loops
       // don't grow the checkpoint dir by one dataset copy per round
@@ -108,14 +115,6 @@ object Sessions {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
-  }
-
-  /** Full session lifecycle (start → run → tear down), mirroring
-    * `workflow.py`'s try/finally around `_tear_down_flink_session`. */
-  def withSession[A](c: Conf)(f: SparkSession => A): A = {
-    val spark = build(c)
-    try f(spark)
-    finally spark.stop()
   }
 
   /** The sandbox entry-point conf: SPARK_GRAFT_CPUS threads, one task per

@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
 object RelationalQueries {
 
   /** The shared warehouse-backed snap catalog (`graftwh`) used by the
-    * SQL-lifecycle queries. DETERMINISTIC per application (tmpdir +
-    * appId) and registered under a lock: catalog queries run
-    * CONCURRENTLY in Verify's pool, and a check-then-set race on the
-    * warehouse option would let the cached catalog instance capture a
+    * SQL-lifecycle queries. The path-addressed `graftsnap` catalog comes
+    * with the session (`Sessions.sparkConf`); this one cannot, because
+    * its warehouse path needs the application id, unknown before the
+    * build. DETERMINISTIC per application (tmpdir + appId) and
+    * registered under a lock: catalog queries run CONCURRENTLY in
+    * Verify's pool, and a check-then-set race on the warehouse option would let the cached catalog instance capture a
     * different warehouse than a later conf read (the table would
     * silently resolve somewhere else). Same-value double-sets are
     * harmless; per-table DROP IF EXISTS handles same-session re-runs. */
@@ -268,8 +270,6 @@ object RelationalQueries {
     // The oracle spells each version's closed form; v4 = v3 plus the 50
     // re-keyed rows the INSERT copied from v1.
     "q_scan_snapcat" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graftsnap",
-        "graft.sources.SnaplogCatalog")
       val tmp = java.nio.file.Files.createTempDirectory("graft_cat").toString
       val t = graft.operators.SnapshotLog.open(s, tmp, "doc_id")
       val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
@@ -784,13 +784,12 @@ object RelationalQueries {
         Seq("doc_id", "chars", "src"), "the merge must widen the schema")
       require(t.readEntry(2).data.size >= 3,
         "evolution must not force a full rewrite")
-      s.conf.set("spark.sql.catalog.graftmev", "graft.sources.SnaplogCatalog")
       docs.where((col("doc_id") < 100) ||
           (col("doc_id") >= 400 && col("doc_id") < 450))
         .select(col("doc_id"), (col("n_chars") * 3).as("chars"),
           col("lang").as("src"), (col("n_chars") % 7).as("w"))
         .createOrReplaceTempView("graft_mev_src")
-      s.sql(s"MERGE WITH SCHEMA EVOLUTION INTO graftmev.`$tmp` t " +
+      s.sql(s"MERGE WITH SCHEMA EVOLUTION INTO graftsnap.`$tmp` t " +
         "USING graft_mev_src s ON t.doc_id = s.doc_id " +
         "WHEN MATCHED THEN UPDATE SET * " +
         "WHEN NOT MATCHED THEN INSERT *")                             // v3+v4
@@ -846,9 +845,7 @@ object RelationalQueries {
           .iterator().asScala.count(_.toString.endsWith(".parquet"))
       }
       val before = parquets()
-      s.conf.set("spark.sql.catalog.graftwiden",
-        "graft.sources.SnaplogCatalog")
-      s.sql(s"ALTER TABLE graftwiden.`$tmp` ALTER COLUMN cnt TYPE BIGINT")
+      s.sql(s"ALTER TABLE graftsnap.`$tmp` ALTER COLUMN cnt TYPE BIGINT")
       t.alterColumnType("r",
         org.apache.spark.sql.types.DoubleType)                       // v4
       require(parquets() == before,
@@ -1001,7 +998,7 @@ object RelationalQueries {
     // INTO appends land as native DSv2 commits, a non-band DELETE takes
     // the row-level COW route, and an INSERT whose source is a
     // time-traveled SELECT of the table itself re-keys v2 rows — every
-    // statement addressed purely by NAME (`graftsnap.cat2`), no path in
+    // statement addressed purely by NAME (`graftwh.cat2`), no path in
     // the SQL text. The result reads all five versions back with
     // VERSION AS OF by name; oracle is the closed form per version.
     "q_scan_snapcat2" -> ((s, d) => {
@@ -1046,8 +1043,6 @@ object RelationalQueries {
     // as q_scan_snapdml: the two routes and the API must agree bit-for-
     // bit.
     "q_scan_snapdml_sql" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graftsnap",
-        "graft.sources.SnaplogCatalog")
       val tmp = java.nio.file.Files.createTempDirectory("graft_dmlq").toString
       val t = graft.operators.SnapshotLog.open(s, tmp, "doc_id")
       val docs = Tables.documents(s, d)
@@ -1083,8 +1078,6 @@ object RelationalQueries {
     // it — the commitMerge contract, now reachable from SQL text, and
     // hash-exact against the same coalesce oracle as q_scan_merge.
     "q_scan_merge_sql" -> ((s, d) => {
-      s.conf.set("spark.sql.catalog.graftsnap",
-        "graft.sources.SnaplogCatalog")
       val tmp = java.nio.file.Files.createTempDirectory("graft_mrgq").toString
       val t = graft.operators.SnapshotLog.open(s, tmp, "doc_id")
       val docs = Tables.documents(s, d)

@@ -11,12 +11,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.operators.SnapshotLog
 
 /** [[TableCatalog]] for snapshot-log tables — the rung that makes the
-  * log's versioned reads AND its lifecycle SQL-NATIVE. Register once:
+  * log's versioned reads AND its lifecycle SQL-NATIVE. Register once, at
+  * session build: `Sessions.sparkConf` sets the path-addressed entry
+  * `spark.sql.catalog.graftsnap -> graft.sources.SnaplogCatalog`; a
+  * name-addressed catalog also needs its warehouse root:
   *
   * {{{
-  * spark.conf.set("spark.sql.catalog.snap",
-  *   "graft.sources.SnaplogCatalog")
-  * spark.conf.set("spark.sql.catalog.snap.warehouse", "/data/warehouse")
+  * SparkSession.builder()
+  *   .config("spark.sql.catalog.snap", "graft.sources.SnaplogCatalog")
+  *   .config("spark.sql.catalog.snap.warehouse", "/data/warehouse")
   * }}}
   *
   * Tables address two ways:

@@ -166,7 +166,11 @@ object EventStreams {
 
   /** Stream-stream interval join (Flink intervalJoin analogue, Q-JOIN-7's
     * streaming twin): purchase events joined to the same user's preceding
-    * signup within `horizon`. Both sides watermarked so join state expires. */
+    * signup within `horizon`. Both sides watermarked so join state expires.
+    * With `joinType = "left_outer"` a purchase with no signup in the
+    * horizon still emits (with nulls), but only once the watermark passes
+    * its join window: until then a matching right row could still arrive,
+    * so the unmatched row's emission time is the watermark crossing. */
   def intervalJoin(left: DataFrame, right: DataFrame,
                    horizon: String = "10 minutes",
                    delay: String = "15 minutes",
@@ -181,17 +185,6 @@ object EventStreams {
       s"l_user = r_user AND r_ts BETWEEN l_ts - INTERVAL $horizon AND l_ts"),
       joinType)
   }
-
-  /** Left-outer stream-stream interval join: purchases with NO preceding
-    * signup in the horizon still emit (with nulls) — but only once the
-    * watermark passes their join window, because until then a matching
-    * right row could still arrive. The state-expiry semantics the inner
-    * variant's watermarks give for free become OBSERVABLE here: an
-    * unmatched row's emission time is the watermark crossing. */
-  def intervalJoinOuter(left: DataFrame, right: DataFrame,
-                        horizon: String = "10 minutes",
-                        delay: String = "15 minutes"): DataFrame =
-    intervalJoin(left, right, horizon, delay, "left_outer")
 
   /** Arbitrary-state sessionization via flatMapGroupsWithState with
     * event-time timeout: a session closes when a gap > `gapMinutes` appears
@@ -374,9 +367,9 @@ object EventStreams {
     head + steps.tail.map(s => rep(gap(s), atom(s), s.minRep, s.maxRep)).mkString
   }
 
-  /** The quantified NFA's single transition, shared by the
-    * flatMapGroupsWithState and transformWithState twins and DIRECTLY
-    * parity-testable against the batch regex. Semantics: LAZY
+  /** The quantified NFA's single transition, run by [[detectPatternQ]]'s
+    * flatMapGroupsWithState operator and DIRECTLY parity-testable against
+    * the batch regex. Semantics: LAZY
     * (leftmost-earliest) skip-till-next-match — the exact extents of the
     * Java/RE2 lazy regex `sym₀ (?:.*?symᵢ){minᵢ,maxᵢ}? … .*? symₗ`
     * (an alternation step's symbol set spelled as one `(?:x|y)` atom —
@@ -744,357 +737,6 @@ object EventStreams {
       }
   }
 
-  /** transformWithState (state API v2) sessionizer — [[sessionize]]'s
-    * modern twin: the same per-key gap state machine, but the
-    * watermark-timeout arm runs through a REGISTERED EVENT-TIME TIMER
-    * (`getHandle.registerTimer`) instead of `GroupStateTimeout` — the v2
-    * API separates "rows arrived" from "time passed", so the close-on-
-    * timeout path is its own callback rather than a `hasTimedOut` branch.
-    * Each update moves the key's single timer to `end + gap` (old timer
-    * deleted); a fired timer whose expiry no longer equals the live
-    * session's deadline is stale and ignored. Semantics are asserted
-    * identical to [[sessionize]] on the same MemoryStream batches
-    * (StreamingSpec parity golden). RocksDB state store required.
-    */
-  class SessionizeProcessor(gapMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, SessionOut] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-
-    @transient private var st: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessionState]("session",
-        Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[Event],
-                                 tv: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var cur = if (st.exists()) st.get() else null
-      val hadDeadline = if (cur != null) Some(cur.end + gapMs) else None
-      val closed = Seq.newBuilder[SessionOut]
-      for (e <- sorted) {
-        val t = e.ts.getTime
-        if (cur == null) cur = SessionState(t, t, 1)
-        else if (t - cur.end > gapMs) {
-          closed += SessionOut(uid, cur.n,
-            new Timestamp(cur.start), new Timestamp(cur.end))
-          cur = SessionState(t, t, 1)
-        } else cur = SessionState(cur.start, math.max(cur.end, t), cur.n + 1)
-      }
-      if (cur != null) {
-        st.update(cur)
-        val deadline = cur.end + gapMs
-        if (!hadDeadline.contains(deadline)) {
-          hadDeadline.foreach(getHandle.deleteTimer)
-          // a deadline at/below the watermark would never fire — clamp
-          // (same contract as the fMGWS setTimeoutTimestamp clamp)
-          getHandle.registerTimer(
-            math.max(deadline, tv.getCurrentWatermarkInMs() + 1))
-        }
-      }
-      closed.result().iterator
-    }
-
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[SessionOut] =
-      if (st.exists()) {
-        val s = st.get()
-        // stale timer from a session this key has since extended?
-        if (info.getExpiryTimeInMs >=
-            math.min(s.end + gapMs, tv.getCurrentWatermarkInMs() + 1)) {
-          st.clear()
-          Iterator.single(SessionOut(uid, s.n,
-            new Timestamp(s.start), new Timestamp(s.end)))
-        } else Iterator.empty
-      } else Iterator.empty
-  }
-
-  /** [[sessionize]] via transformWithState; parity asserted in
-    * StreamingSpec on the same MemoryStream batches. */
-  def sessionizeTws(events: Dataset[Event], gapMinutes: Int = 30,
-                    delay: String = "15 minutes"): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionizeProcessor(gapMinutes * 60000L),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** transformWithState twin of [[detectPattern]]'s NFA: same
-    * skip-till-next-match chain state (the shared [[nfaStep]] transition,
-    * quantifiers included), horizon expiry via a registered
-    * event-time timer (state GC without a row arriving — the case
-    * `GroupStateTimeout` covered). A fired timer only clears state whose
-    * chain really is past its horizon; stale timers from superseded
-    * chains are ignored. Parity asserted in StreamingSpec.
-    */
-  class PatternProcessor(steps: IndexedSeq[QStep], withinSec: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, PatternMatch] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-
-    @transient private var st: ValueState[PatternState] = _
-    private val horizonMs = withinSec * 1000L
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[PatternState]("chain",
-        Encoders.product[PatternState], TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[Event],
-                                 tv: TimerValues): Iterator[PatternMatch] = {
-      // epoch-seconds ordering contract, as in detectPattern
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime / 1000, e.event_id))
-      var cur = if (st.exists()) st.get() else null
-      val hadDeadline = if (cur != null) Some(cur.start * 1000L + horizonMs) else None
-      val out = Seq.newBuilder[PatternMatch]
-      for (e <- sorted) {
-        val t = e.ts.getTime / 1000
-        if (cur != null && t - cur.start > withinSec) cur = null
-        val (next, done) = nfaStep(steps, cur, t, e.event_type)
-        cur = next
-        done.foreach { case (start, end, n) =>
-          out += PatternMatch(uid, new Timestamp(start * 1000L),
-            new Timestamp(end * 1000L), n)
-        }
-      }
-      if (cur != null) {
-        st.update(cur)
-        val deadline = cur.start * 1000L + horizonMs
-        if (!hadDeadline.contains(deadline)) {
-          hadDeadline.foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(
-            math.max(deadline, tv.getCurrentWatermarkInMs() + 1))
-        }
-      } else {
-        st.clear()
-        hadDeadline.foreach(getHandle.deleteTimer)
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[PatternMatch] = {
-      if (st.exists()) {
-        val s = st.get()
-        // only clear a chain genuinely past its horizon (stale timers from
-        // a superseded chain may fire first)
-        if (info.getExpiryTimeInMs >=
-            math.min(s.start * 1000L + horizonMs, tv.getCurrentWatermarkInMs() + 1))
-          st.clear()
-      }
-      Iterator.empty
-    }
-  }
-
-  /** transformWithState twin of [[detectPatternNeg]]: the same
-    * [[negNfaStep]] Thompson simulation, horizon GC via a registered
-    * event-time timer at the earliest run's expiry. Parity asserted in
-    * StreamingSpec. */
-  class NegPatternProcessor(steps: IndexedSeq[QStep], withinSec: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, PatternMatch] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-
-    @transient private var st: ValueState[NegState] = _
-    private val nLevels = steps.size - 1
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[NegState]("neglevels",
-        Encoders.product[NegState], TTLConfig.NONE)
-
-    private def arm(lv: IndexedSeq[Seq[Long]], tv: TimerValues,
-                    prev: Option[Long]): Unit = {
-      val deadline = (lv.flatten.min + withinSec) * 1000L + 1
-      if (!prev.contains(deadline)) {
-        prev.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(
-          math.max(deadline, tv.getCurrentWatermarkInMs() + 1))
-      }
-    }
-
-    private def prevDeadline(lv: Seq[Seq[Long]]): Option[Long] =
-      lv.flatten.minOption.map(m => (m + withinSec) * 1000L + 1)
-
-    override def handleInputRows(uid: Long, rows: Iterator[Event],
-                                 tv: TimerValues): Iterator[PatternMatch] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime / 1000, e.event_id))
-      var lv: IndexedSeq[Seq[Long]] =
-        if (st.exists()) st.get().starts.toIndexedSeq
-        else IndexedSeq.fill(nLevels)(Seq.empty[Long])
-      val prev = prevDeadline(lv)
-      val out = Seq.newBuilder[PatternMatch]
-      for (e <- sorted) {
-        val t = e.ts.getTime / 1000
-        val (next, done) = negNfaStep(steps, lv, t, e.event_type, withinSec)
-        lv = next
-        done.foreach { case (start, end) =>
-          out += PatternMatch(uid, new Timestamp(start * 1000L),
-            new Timestamp(end * 1000L), steps.size)
-        }
-      }
-      if (lv.exists(_.nonEmpty)) { st.update(NegState(lv)); arm(lv, tv, prev) }
-      else { st.clear(); prev.foreach(getHandle.deleteTimer) }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[PatternMatch] = {
-      if (st.exists()) {
-        val wmSec = tv.getCurrentWatermarkInMs() / 1000
-        val lv = st.get().starts.toIndexedSeq
-          .map(_.filter(_ + withinSec >= wmSec))
-        if (lv.forall(_.isEmpty)) st.clear()
-        else { st.update(NegState(lv)); arm(lv, tv, None) }
-      }
-      Iterator.empty
-    }
-  }
-
-  /** transformWithState twin of [[detectPatternStrict]]: the same
-    * [[strictNfaStep]] single chain, horizon GC via a registered
-    * event-time timer. Parity asserted in StreamingSpec. */
-  class StrictPatternProcessor(steps: IndexedSeq[QStep], withinSec: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, PatternMatch] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-
-    @transient private var st: ValueState[StrictChainState] = _
-    private val horizonMs = withinSec * 1000L
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[StrictChainState]("strictchain",
-        Encoders.product[StrictChainState], TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[Event],
-                                 tv: TimerValues): Iterator[PatternMatch] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime / 1000, e.event_id))
-      var cur = if (st.exists()) st.get() else null
-      val hadDeadline = if (cur != null) Some(cur.start * 1000L + horizonMs) else None
-      val out = Seq.newBuilder[PatternMatch]
-      for (e <- sorted) {
-        val t = e.ts.getTime / 1000
-        if (cur != null && t - cur.start > withinSec) cur = null
-        val (next, done) = strictNfaStep(steps, cur, t, e.event_type)
-        cur = next
-        done.foreach { case (start, end, n) =>
-          out += PatternMatch(uid, new Timestamp(start * 1000L),
-            new Timestamp(end * 1000L), n)
-        }
-      }
-      if (cur != null) {
-        st.update(cur)
-        val deadline = cur.start * 1000L + horizonMs
-        if (!hadDeadline.contains(deadline)) {
-          hadDeadline.foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(
-            math.max(deadline, tv.getCurrentWatermarkInMs() + 1))
-        }
-      } else {
-        st.clear()
-        hadDeadline.foreach(getHandle.deleteTimer)
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(uid: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[PatternMatch] = {
-      if (st.exists()) {
-        val s = st.get()
-        if (info.getExpiryTimeInMs >=
-            math.min(s.start * 1000L + horizonMs, tv.getCurrentWatermarkInMs() + 1))
-          st.clear()
-      }
-      Iterator.empty
-    }
-  }
-
-  /** [[detectPattern]] via transformWithState; parity asserted in
-    * StreamingSpec. */
-  def detectPatternTws(events: Dataset[Event], steps: Seq[String],
-                       withinSec: Long,
-                       delay: String = "15 minutes"): Dataset[PatternMatch] = {
-    require(steps.size >= 2, s"pattern needs >= 2 steps: $steps")
-    detectPatternQTws(events, steps.map(QStep(_, 1, 1)).toIndexedSeq,
-      withinSec, delay)
-  }
-
-  /** [[detectPatternQ]] via transformWithState; parity asserted in
-    * StreamingSpec. */
-  def detectPatternQTws(events: Dataset[Event], steps: IndexedSeq[QStep],
-                        withinSec: Long,
-                        delay: String = "15 minutes"): Dataset[PatternMatch] = {
-    require(steps.nonEmpty && steps.head.minRep >= 1,
-      s"pattern must open on a required step: $steps")
-    require(steps.forall(_.negs.isEmpty) ||
-        steps.forall(s => s.minRep == 1 && s.maxRep == 1),
-      s"negations require a plain (1,1) chain: $steps")
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val proc: org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, PatternMatch] =
-      if (steps.exists(_.negs.nonEmpty)) new NegPatternProcessor(steps, withinSec)
-      else if (steps.exists(s => s.strict || s.notNext.nonEmpty))
-        new StrictPatternProcessor(steps, withinSec)
-      else new PatternProcessor(steps, withinSec)
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(proc,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** transformWithState (state API v2, RocksDB-backed) version of the job
-    * monitor — the modern replacement for flatMapGroupsWithState: typed
-    * named state, per-key timers, TTL. Requires the RocksDB state store
-    * provider (`spark.sql.streaming.stateStore.providerClass`).
-    */
-  class JobMonitorProcessor(terminal: Set[String])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, JobEvent, JobResult] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-
-    @transient private var st: ValueState[JobState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[JobState]("job",
-        Encoders.product[JobState], TTLConfig.NONE)
-
-    override def handleInputRows(jid: String, rows: Iterator[JobEvent],
-                                 tv: TimerValues): Iterator[JobResult] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var cur = if (st.exists()) st.get()
-        else JobState(sorted.headOption.map(_.ts.getTime).getOrElse(0L), 0)
-      val out = Seq.newBuilder[JobResult]
-      var done = false
-      for (e <- sorted if !done) {
-        cur = JobState(cur.firstTs, cur.nPolls + 1)
-        if (terminal(e.status)) {
-          out += JobResult(jid, e.status, cur.nPolls,
-            (e.ts.getTime - cur.firstTs) / 1000.0)
-          done = true
-        }
-      }
-      if (done) st.clear() else st.update(cur)
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(jid: String, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[JobResult] =
-      Iterator.empty
-  }
-
-  /** monitorJobs via transformWithState; semantics identical to
-    * `monitorJobs` (asserted in StreamingSpec). */
-  def monitorJobsTws(polls: Dataset[JobEvent],
-                     terminal: Set[String] = Set("SUCCEEDED", "FAILED", "KILLED"))
-      : Dataset[JobResult] = {
-    import polls.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    polls.groupByKey(_.job_id)
-      .transformWithState(new JobMonitorProcessor(terminal),
-        TimeMode.None(), OutputMode.Append())
-  }
-
   /** R11's monitored join as a streaming state machine: one JobResult per
     * job when its status stream reaches a terminal state; per-job state is
     * (first-poll ts, polls so far) and is dropped on completion.
@@ -1103,7 +745,7 @@ object EventStreams {
     * poll list): emission is at-least-once per completion — a duplicate
     * terminal event arriving AFTER state was dropped re-registers the job
     * and re-emits. Producers that can replay terminal states should dedup
-    * downstream (`dropDuplicates("job_id")`). Same for `monitorJobsTws`. */
+    * downstream (`dropDuplicates("job_id")`). */
   def monitorJobs(polls: Dataset[JobEvent],
                   terminal: Set[String] = Set("SUCCEEDED", "FAILED", "KILLED"))
       : Dataset[JobResult] = {

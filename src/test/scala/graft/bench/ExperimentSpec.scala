@@ -104,6 +104,7 @@ class ExperimentSpec extends AnyFunSuite {
     assert(solo("spark.sql.session.timeZone") == "UTC")
     assert(solo("spark.sql.adaptive.enabled") == "true")
     assert(solo("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(solo("spark.sql.catalog.graftsnap") == "graft.sources.SnaplogCatalog")
     // the sandbox conf honors SPARK_GRAFT_CPUS-default sizing contract
     val loc = Sessions.local(defaultCpus = 4)
     assert(loc.master.startsWith("local["))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.queries.StreamingQueries
+import graft.queries.{RelationalQueries, StreamingQueries}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -127,6 +127,18 @@ class SessionIsolationSpec extends SparkSpec {
         assert(f.get() == serial(n), s"$n differs from its serial run")
       }
     } finally pool.shutdown()
+    assertConfIs(s, before)
+  }
+
+  test("the SQL snapshot-log catalog queries leave a child session's conf unchanged") {
+    // the snap catalog arrives with the session's build; a query that
+    // registered it itself would write the conf of every session it ran on
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    Seq("q_scan_snapcat", "q_scan_snapmergevolve", "q_scan_snapwiden",
+        "q_scan_snapdml_sql", "q_scan_merge_sql").foreach { q =>
+      assert(RelationalQueries.queries(q)(s, sf0001).count() > 0, q)
+    }
     assertConfIs(s, before)
   }
 

@@ -151,42 +151,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState job monitor matches flatMapGroupsWithState semantics") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val prev = s.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[JobEvent]
-      val name = sink()
-      val q = EventStreams.monitorJobsTws(in.toDS())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        in.addData(JobEvent("j1", "RUNNING", ts(0)))
-        q.processAllAvailable()
-        in.addData(JobEvent("j1", "SUCCEEDED", ts(2)), JobEvent("j2", "FAILED", ts(1)))
-        q.processAllAvailable()
-        // post-terminal duplicate: state was dropped, so the job re-registers
-        // and re-emits (documented at-least-once contract, same as the
-        // flatMapGroupsWithState version)
-        in.addData(JobEvent("j1", "SUCCEEDED", ts(3)))
-        q.processAllAvailable()
-        val res = s.table(name).as[JobResult].collect()
-        assert(res.length == 3, res.mkString(","))
-        val first = res.filter(r => r.job_id == "j1" && r.n_polls == 2)
-        assert(first.length == 1 && first.head.final_status == "SUCCEEDED")
-        assert(first.head.secs == 120.0)
-        assert(res.count(_.job_id == "j2") == 1)
-      } finally q.stop()
-    } finally {
-      if (prev.isEmpty)
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      else s.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    }
-  }
-
   test("stream-stream interval join matches signup preceding purchase") {
     val s = spark
     import s.implicits._
@@ -243,8 +207,8 @@ class StreamingSpec extends SparkSpec {
     val signups = MemoryStream[Event]
     val name = sink()
     val q = EventStreams
-      .intervalJoinOuter(purchases.toDF(), signups.toDF(), "10 minutes",
-        delay = "15 minutes")
+      .intervalJoin(purchases.toDF(), signups.toDF(), "10 minutes",
+        delay = "15 minutes", joinType = "left_outer")
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       signups.addData(ev(10, 1, "signup", 0))
@@ -597,7 +561,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** Runs a streaming query over scripted MemoryStream batches and
-    * collects the sink — the harness for old-vs-new state-API parity. */
+    * collects the sink, for the golden tests that compare whole outputs. */
   private def runScripted[O: org.apache.spark.sql.Encoder](
       f: org.apache.spark.sql.Dataset[Event] => org.apache.spark.sql.Dataset[O],
       batches: Seq[Seq[Event]]): Seq[O] = {
@@ -614,70 +578,25 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  private def withRocksDb[A](body: => A): A = {
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.get(key, "")
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally { if (prev.isEmpty) s.conf.unset(key) else s.conf.set(key, prev) }
-  }
-
-  test("sessionizeTws (transformWithState) ≡ sessionize on the same batches") {
+  test("sessionize golden: cross-batch extension, gap and timeout closes, many users") {
     // gap close in-stream, watermark-timeout close, multi-user, cross-batch
     // extension — the full sessionize surface
     val batches = Seq(
       Seq(ev(1, 1, "a", 0), ev(2, 1, "a", 10)),
       Seq(ev(3, 1, "a", 20)),                    // extends the open session
       Seq(ev(4, 1, "a", 100), ev(5, 2, "a", 100)), // gap>30 → closes first
-      Seq(ev(6, 2, "a", 300)),                   // wm → times out u1@100, u2@100
-      Seq(ev(7, 3, "a", 400)),
-      Seq(ev(8, 3, "a", 500)))
+      Seq(ev(6, 2, "a", 300)),                   // gap closes u2@100; wm 295
+      Seq(ev(7, 3, "a", 400)),                   // wm → times out u1@100, u2@300
+      Seq(ev(8, 3, "a", 500)))                   // gap closes u3@400; u3@500 open
     def norm(xs: Seq[SessionOut]) =
       xs.sortBy(o => (o.user_id, o.start.getTime, o.end.getTime, o.n_events))
     implicit val enc = org.apache.spark.sql.Encoders.product[SessionOut]
-    val old = norm(runScripted[SessionOut](
+    val got = norm(runScripted[SessionOut](
       EventStreams.sessionize(_, 30, "5 minutes"), batches))
-    val tws = withRocksDb { norm(runScripted[SessionOut](
-      EventStreams.sessionizeTws(_, 30, "5 minutes"), batches)) }
-    assert(tws === old, s"tws=$tws old=$old")
-    assert(old.length >= 3, old.toString) // the script really closes sessions
-  }
-
-  test("detectPatternTws (transformWithState) ≡ detectPattern on the same batches") {
-    val steps = Seq("view", "click", "purchase")
-    val batches = Seq(
-      Seq(ev(1, 1, "view", 0), ev(2, 1, "error", 5), ev(3, 1, "click", 10)),
-      Seq(ev(4, 1, "purchase", 20)),             // completes across batches
-      Seq(ev(5, 1, "purchase", 25), ev(6, 1, "view", 30),
-          ev(7, 1, "click", 40), ev(8, 1, "purchase", 50)), // skip-past + fresh
-      Seq(ev(9, 2, "view", 100)),
-      Seq(ev(10, 2, "click", 170), ev(11, 2, "view", 180),
-          ev(12, 2, "click", 190), ev(13, 2, "purchase", 200))) // horizon expiry
-    def norm(xs: Seq[PatternMatch]) =
-      xs.sortBy(m => (m.user_id, m.start.getTime, m.end.getTime))
-    implicit val enc = org.apache.spark.sql.Encoders.product[PatternMatch]
-    val old = norm(runScripted[PatternMatch](
-      EventStreams.detectPattern(_, steps, 60L * 60), batches))
-    val tws = withRocksDb { norm(runScripted[PatternMatch](
-      EventStreams.detectPatternTws(_, steps, 60L * 60), batches)) }
-    assert(tws === old, s"tws=$tws old=$old")
-    assert(old.length === 3, old.toString)
-  }
-
-  test("detectPatternTws expires chain state via its event-time timer") {
-    withRocksDb {
-      implicit val enc = org.apache.spark.sql.Encoders.product[PatternMatch]
-      val got = runScripted[PatternMatch](
-        EventStreams.detectPatternTws(_, Seq("view", "purchase"),
-          withinSec = 10L * 60, delay = "5 minutes"),
-        Seq(Seq(ev(1, 1, "view", 0)),
-            Seq(ev(2, 2, "view", 100)),
-            Seq(ev(3, 2, "view", 101)),
-            Seq(ev(4, 1, "purchase", 102))))
-      assert(got.isEmpty, s"expired chain must not match: $got")
-    }
+    assert(got === Seq(
+      SessionOut(1L, 3, ts(0), ts(20)), SessionOut(1L, 1, ts(100), ts(100)),
+      SessionOut(2L, 1, ts(100), ts(100)), SessionOut(2L, 1, ts(300), ts(300)),
+      SessionOut(3L, 1, ts(400), ts(400))), got.toString)
   }
 
   test("parsePattern: quantifier DSL and validation") {
@@ -891,27 +810,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("detectPatternQTws ≡ detectPatternQ on strict chains (round 13)") {
-    val steps = EventStreams.parsePattern("view !>error click >purchase")
-    val batches = Seq(
-      Seq(ev(1, 1, "view", 0)),
-      Seq(ev(2, 1, "error", 5), ev(3, 1, "click", 8), ev(4, 1, "purchase", 10)),
-      Seq(ev(5, 2, "view", 20), ev(6, 2, "signup", 21)),
-      Seq(ev(7, 2, "error", 22), ev(8, 2, "click", 24), ev(9, 2, "purchase", 25),
-          ev(10, 3, "view", 30), ev(11, 3, "click", 31), ev(12, 3, "signup", 32),
-          ev(13, 3, "view", 33), ev(14, 3, "click", 34), ev(15, 3, "purchase", 35)))
-    def norm(xs: Seq[PatternMatch]) =
-      xs.sortBy(m => (m.user_id, m.start.getTime, m.end.getTime))
-    implicit val enc = org.apache.spark.sql.Encoders.product[PatternMatch]
-    val fmgws = norm(runScripted[PatternMatch](
-      EventStreams.detectPatternQ(_, steps, 60L * 60), batches))
-    val tws = withRocksDb { norm(runScripted[PatternMatch](
-      EventStreams.detectPatternQTws(_, steps, 60L * 60), batches)) }
-    assert(tws === fmgws, s"tws=$tws fmgws=$fmgws")
-    assert(fmgws.map(m => (m.user_id, m.start, m.end)) ===
-      Seq((2L, ts(20), ts(25)), (3L, ts(33), ts(35))), fmgws.toString)
-  }
-
   test("lazyRegexTwin reproduces the catalog oracle regexes") {
     // q_stream_cep2's hand-spelled oracle string, derived
     assert(EventStreams.lazyRegexTwin(
@@ -989,26 +887,6 @@ class StreamingSpec extends SparkSpec {
       assert(s.table(name).as[PatternMatch].collect()
         .count(_.user_id == 3L) === 0)
     } finally q.stop()
-  }
-
-  test("detectPatternQTws ≡ detectPatternQ on quantified batches") {
-    val steps = EventStreams.parsePattern("view click{2,3} signup? purchase")
-    val batches = Seq(
-      Seq(ev(1, 1, "view", 0), ev(2, 1, "click", 5), ev(3, 1, "purchase", 8)),
-      Seq(ev(4, 1, "click", 10), ev(5, 1, "signup", 12), ev(6, 1, "purchase", 15)),
-      Seq(ev(7, 2, "view", 20), ev(8, 2, "click", 21), ev(9, 2, "click", 22),
-          ev(10, 2, "click", 23), ev(11, 2, "click", 24), ev(12, 2, "purchase", 26)),
-      Seq(ev(13, 3, "view", 100), ev(14, 3, "click", 110)),
-      Seq(ev(15, 3, "click", 170), ev(16, 3, "purchase", 175)))
-    def norm(xs: Seq[PatternMatch]) =
-      xs.sortBy(m => (m.user_id, m.start.getTime, m.end.getTime))
-    implicit val enc = org.apache.spark.sql.Encoders.product[PatternMatch]
-    val fmgws = norm(runScripted[PatternMatch](
-      EventStreams.detectPatternQ(_, steps, 60L * 60), batches))
-    val tws = withRocksDb { norm(runScripted[PatternMatch](
-      EventStreams.detectPatternQTws(_, steps, 60L * 60), batches)) }
-    assert(tws === fmgws, s"tws=$tws fmgws=$fmgws")
-    assert(fmgws.length === 2, fmgws.toString)
   }
 
   test("nfaStep extents ≡ lazy Java regex on randomized symbol streams") {
@@ -1131,22 +1009,21 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("detectPatternQTws ≡ detectPatternQ on alternation batches") {
+  test("detectPatternQ alternation golden: group reps, optional step, error-only bound") {
     val steps = EventStreams.parsePattern("view (click|error){2,3} signup? purchase")
     val batches = Seq(
       Seq(ev(1, 1, "view", 0), ev(2, 1, "click", 5)),
       Seq(ev(3, 1, "error", 10), ev(4, 1, "signup", 12), ev(5, 1, "purchase", 15)),
       Seq(ev(6, 2, "view", 20), ev(7, 2, "error", 21), ev(8, 2, "error", 22),
           ev(9, 2, "purchase", 26)))
-    def norm(xs: Seq[PatternMatch]) =
-      xs.sortBy(m => (m.user_id, m.start.getTime, m.end.getTime))
     implicit val enc = org.apache.spark.sql.Encoders.product[PatternMatch]
-    val fmgws = norm(runScripted[PatternMatch](
-      EventStreams.detectPatternQ(_, steps, 60L * 60), batches))
-    val tws = withRocksDb { norm(runScripted[PatternMatch](
-      EventStreams.detectPatternQTws(_, steps, 60L * 60), batches)) }
-    assert(tws === fmgws, s"tws=$tws fmgws=$fmgws")
-    assert(fmgws.length === 2, fmgws.toString)
+    val got = runScripted[PatternMatch](
+        EventStreams.detectPatternQ(_, steps, 60L * 60), batches)
+      .sortBy(m => (m.user_id, m.start.getTime))
+    // u1: click + error reach the {2,3} min across batches and the optional
+    // signup is consumed (5 events); u2: two errors alone meet the bound
+    assert(got === Seq(PatternMatch(1L, ts(0), ts(15), 5),
+      PatternMatch(2L, ts(20), ts(26), 4)), got.toString)
   }
 
   test("detectPatternQ negation: a negated type in the gap kills the chain (cross-batch)") {
@@ -1222,29 +1099,18 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("detectPatternQTws ≡ detectPatternQ on negation + oneOrMore batches") {
-    def check(pat: String, batches: Seq[Seq[Event]], expected: Int): Unit = {
-      val steps = EventStreams.parsePattern(pat)
-      def norm(xs: Seq[PatternMatch]) =
-        xs.sortBy(m => (m.user_id, m.start.getTime, m.end.getTime))
-      implicit val enc = org.apache.spark.sql.Encoders.product[PatternMatch]
-      val fmgws = norm(runScripted[PatternMatch](
-        EventStreams.detectPatternQ(_, steps, 60L * 60), batches))
-      val tws = withRocksDb { norm(runScripted[PatternMatch](
-        EventStreams.detectPatternQTws(_, steps, 60L * 60), batches)) }
-      assert(tws === fmgws, s"pat=$pat tws=$tws fmgws=$fmgws")
-      assert(fmgws.length === expected, s"pat=$pat got=$fmgws")
-    }
-    check("view !error click !signup purchase", Seq(
-      Seq(ev(1, 1, "view", 0)),
-      Seq(ev(2, 1, "error", 5), ev(3, 1, "click", 8), ev(4, 1, "purchase", 10)),
-      Seq(ev(5, 2, "view", 20), ev(6, 2, "click", 22), ev(7, 2, "purchase", 25))),
-      expected = 1)
-    check("view click+ signup? purchase", Seq(
-      Seq(ev(1, 1, "view", 0), ev(2, 1, "click", 1)),
-      Seq(ev(3, 1, "click", 2), ev(4, 1, "signup", 3), ev(5, 1, "purchase", 5)),
-      Seq(ev(6, 2, "view", 20), ev(7, 2, "purchase", 23))),
-      expected = 1)
+  test("detectPatternQ oneOrMore golden: click+ with a trailing optional step") {
+    implicit val enc = org.apache.spark.sql.Encoders.product[PatternMatch]
+    val got = runScripted[PatternMatch](
+      EventStreams.detectPatternQ(_,
+        EventStreams.parsePattern("view click+ signup? purchase"), 60L * 60),
+      Seq(
+        Seq(ev(1, 1, "view", 0), ev(2, 1, "click", 1)),
+        Seq(ev(3, 1, "click", 2), ev(4, 1, "signup", 3), ev(5, 1, "purchase", 5)),
+        Seq(ev(6, 2, "view", 20), ev(7, 2, "purchase", 23))))
+    // u1: two clicks across batches, optional signup consumed (5 events);
+    // u2: no click, so click+ is below its min and nothing matches
+    assert(got === Seq(PatternMatch(1L, ts(0), ts(5), 5)), got.toString)
   }
 
   test("detectPattern orders same-second events by event_id (epoch-seconds contract)") {
