@@ -1,5 +1,8 @@
 package graft.genomics
 
+import java.util.zip.Deflater
+
+import org.apache.hadoop.io.compress.zlib.ZlibCompressor
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,24 +22,47 @@ object Codecs {
     (f(0), f(1), f(2), f(3), f(4))
   }
 
-  /** R6: write PRQ as `out/sample=<s>/part-*.txt.gz`, `numTasks` writers per
-    * sample. Repartitioning by (sample, writer-salt) before the sink means
-    * every written part has rows — R7's empty-part pruning pass becomes
-    * unnecessary by construction (the reference needed it because its sink
-    * pre-allocated one file per writer regardless of content,
-    * `workflow.py:360-373`). */
-  def writePartitionedGzip(reads: Dataset[PrqRead], outDir: String,
-                           numTasks: Int = 4): Unit = {
-    import reads.sparkSession.implicits._
+  /** gzip level of the PRQ intermediate: zlib's fastest, the level the
+    * reference's single-node arm runs bcl2fastq at
+    * (`--fastq-compression-level 1`, `baseline_workflow.py:86-89`). The
+    * intermediate is deleted once its sample is aligned, so write speed
+    * counts for more than its size (level 1 writes ~8 % more bytes than
+    * the default level 6, for much less CPU). */
+  val PrqGzipLevel: Int = Deflater.BEST_SPEED
+
+  /** R6: write PRQ as `out/sample=<s>/part-*.txt.gz` at [[PrqGzipLevel]].
+    * The one shuffle spreads reads by id over the session's width
+    * (`spark.sql.shuffle.partitions`), so every writer holds about
+    * 1/width of every sample and a sample with at least width reads gets
+    * exactly width part files of near-equal size — the reference's
+    * `numTasks` writers (`workflow.py:252-253`). A fixed-count repartition
+    * is one adaptive execution never coalesces. Every written part has
+    * rows, so R7's empty-part pruning pass is unnecessary by construction
+    * (the reference needed it because its sink pre-allocated one file per
+    * writer regardless of content, `workflow.py:360-373`).
+    *
+    * The level travels as a write option: Spark copies write options into
+    * the job's Hadoop conf, where Hadoop's gzip compressor reads
+    * `zlib.compress.level` (the pure-Java `BuiltInGzipCompressor` and the
+    * native one alike). */
+  def writePartitionedGzip(reads: Dataset[PrqRead], outDir: String): Unit = {
+    val width = reads.sparkSession.sessionState.conf.numShufflePartitions
     reads
-      .repartition(col("sample"), pmod(xxhash64(col("id")), lit(numTasks)))
+      .repartition(width, col("id"))
       .select(col("sample"), concat_ws("\t",
         col("id"), col("seq1"), col("qual1"), col("seq2"), col("qual2")).as("value"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("sample")
       .option("compression", "gzip")
+      .option("zlib.compress.level", zlibLevelName)
       .text(outDir)
   }
+
+  /** [[PrqGzipLevel]] by its `ZlibCompressor.CompressionLevel` name, the
+    * form the `zlib.compress.level` key takes; that enum declares
+    * `NO_COMPRESSION` .. `BEST_COMPRESSION` in level order. */
+  private val zlibLevelName: String =
+    ZlibCompressor.CompressionLevel.values()(PrqGzipLevel).name
 
   /** Read a PRQ directory written by `writePartitionedGzip` back to rows;
     * the `sample=` partition column is restored by the scan. */
@@ -71,25 +97,6 @@ object Codecs {
       val l = s.toLowerCase
       !s.startsWith("_") && !l.contains("unknown") && !l.contains("undetermined")
     }.sorted
-  }
-
-  /** R7 for sinks that can't avoid empty parts: delete files under `dir`
-    * smaller than `minBytes` (gzip header ≈ 20 B ⇒ no payload). Driver-side
-    * filesystem pass, exactly like the reference's `_clean_up_bcl_output`;
-    * FS-agnostic via the Hadoop FileSystem API. */
-  def pruneSmallFiles(spark: SparkSession, dir: String, minBytes: Long = 30): Int = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return 0
-    val it = fs.listFiles(root, true)
-    var n = 0
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.startsWith("part-") && st.getLen < minBytes) {
-        fs.delete(st.getPath, false); n += 1
-      }
-    }
-    n
   }
 
   /** R16/R14: FASTQ 4-line records → (id, seq, qual). Gzip text files are

@@ -14,8 +14,9 @@ import scala.util.{Failure, Success, Try}
   * (`workflow.py:512-548`) re-expressed over Spark actions:
   *
   *  Stage 1: decode + filter + demux + partitioned PRQ sink. The driver
-  *    lists the run once; the decode is one task per tile with no shuffle,
-  *    and the one shuffle of the stage groups reads by sample for the sink.
+  *    lists the run once and builds the demux dictionary; the decode is one
+  *    task per tile that also assigns samples, and the one shuffle of the
+  *    stage spreads reads by id over the sink's writers.
   *  Stage 2: per-sample alignment, ALL samples launched concurrently
   *    (`workflow.py:503`) as parallel actions on one SparkSession; Spark's
   *    scheduler takes the place of YARN app polling (R11). Each sample's

@@ -13,17 +13,19 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 
+import graft.genomics.Codecs
+
 /** V2 WRITE path for the PRQ layout — the other half of the
   * `TableProvider` rung: `df.write.format("prq").mode(...).save(dir)`
   * produces exactly the `dir/sample=<s>/part-*.txt.gz` layout of
   * [[graft.genomics.Codecs.writePartitionedGzip]], with three things the
-  * manual sink spelled by hand now owned by the engine:
+  * manual sink spelled by hand now owned by the engine (parts are gzipped
+  * at the same [[graft.genomics.Codecs.PrqGzipLevel]]):
   *
   *   - [[RequiresDistributionAndOrdering]] asks Spark to CLUSTER the
-  *     input by `sample` before the writers run — the writer-requested
-  *     shuffle replaces the manual `repartition(col("sample"), salt)`;
-  *     each task then holds a handful of open gzip streams instead of
-  *     one per (task × sample).
+  *     input by `sample` before the writers run, where the manual sink
+  *     spreads reads by id; each task then holds a handful of open gzip
+  *     streams instead of one per (task × sample).
   *   - A staging-directory commit protocol: writers emit to
   *     `.spark-staging-<queryId>/`, the job-level commit verifies every
   *     staged file exists and only then publishes — a failed JOB never
@@ -204,7 +206,9 @@ case class PrqWriterFactory(stagingDir: String, fields: Array[String],
           val p = new Path(stagingDir, rel)
           fs.mkdirs(p.getParent)
           (new BufferedWriter(new OutputStreamWriter(
-            new GZIPOutputStream(fs.create(p, true)),
+            new GZIPOutputStream(fs.create(p, true)) {
+              `def`.setLevel(Codecs.PrqGzipLevel)
+            },
             StandardCharsets.UTF_8)), rel)
         })._1
 

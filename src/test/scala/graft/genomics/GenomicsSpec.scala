@@ -334,6 +334,75 @@ class GenomicsSpec extends SparkSpec {
     assert(countJobs === Seq(Seq(4)), "one job, one stage, one task per tile")
   }
 
+  /** A 2-lane x 2-tile run, decoded, filtered and demuxed; the sink's
+    * input as `Pipeline.run` builds it. */
+  private lazy val shapeRun: String = SyntheticRun.writeRun(
+    Files.createTempDirectory("graft_sink_shape"), lanes = 2).toString
+  private def assignedReads: org.apache.spark.sql.Dataset[PrqRead] =
+    Demux.dropUndetermined(Demux.demux(
+      Bcl.applyFilter(Bcl.decodeRun(spark, shapeRun, SyntheticRun.rs)),
+      SyntheticRun.sheet))
+
+  /** Part files of a PRQ sink directory, by sample. */
+  private def partsBySample(dir: String): Map[String, Seq[Path]] = {
+    val it = Files.walk(Paths.get(dir)).iterator()
+    val parts = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("part-")).toSeq
+    parts.groupBy(_.getParent.getFileName.toString.stripPrefix("sample="))
+  }
+
+  test("demux + sink run only the sink's jobs: the dictionary is built on the driver") {
+    val out = Files.createTempDirectory("graft_sink_jobs").toString
+    val (_, jobs) = jobsOf(Codecs.writePartitionedGzip(assignedReads, out))
+    // the sink's shuffle-map job (one task per tile) and its write job; a
+    // Spark-side dictionary (aggregate + broadcast) would add two more
+    assert(jobs.size === 2, jobs)
+    assert(jobs.head === Seq(4), "decode + demux + map side: one task per tile")
+  }
+
+  test("the PRQ sink spreads every sample over the session's width") {
+    val out = Files.createTempDirectory("graft_sink_width").toString
+    val reads = assignedReads
+    Codecs.writePartitionedGzip(reads, out)
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val bySample = partsBySample(out)
+    val counts = reads.groupBy("sample").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(bySample.keySet === counts.keySet)
+    // every sample of the fixture has dozens of reads, more than the width
+    assert(counts.values.forall(_ >= width), counts)
+    bySample.foreach { case (sample, parts) =>
+      assert(parts.size === width, s"$sample: $parts")
+    }
+  }
+
+  test("both PRQ sinks write level-1 gzip") {
+    import java.util.zip.{Deflater, GZIPInputStream}
+    // gzip = 10-byte header + raw deflate + 8-byte trailer; the deflate
+    // length pins the level (at the default level 6 these parts are ~15 %
+    // shorter)
+    def deflatedAtLevel1(p: Path): Long = {
+      val in = new GZIPInputStream(Files.newInputStream(p))
+      val content = try in.readAllBytes() finally in.close()
+      val d = new Deflater(Deflater.BEST_SPEED, true)
+      d.setInput(content); d.finish()
+      val buf = new Array[Byte](1 << 16)
+      var n = 0L
+      while (!d.finished()) n += d.deflate(buf)
+      d.end()
+      n
+    }
+    val reads = assignedReads
+    val manual = Files.createTempDirectory("graft_sink_level").toString
+    Codecs.writePartitionedGzip(reads, manual)
+    val v2 = Files.createTempDirectory("graft_sink_level_v2").toString
+    reads.toDF().select("sample", "id", "seq1", "qual1", "seq2", "qual2")
+      .write.format("prq").mode("overwrite").save(v2)
+    for (dir <- Seq(manual, v2); p <- partsBySample(dir).values.flatten)
+      assert(Files.size(p) === 18 + deflatedAtLevel1(p), p)
+  }
+
   test("chastity filter + demux assigns samples with 1-mismatch tolerance") {
     val reads = Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs))
     val demuxed = Demux.demux(reads, sheet).collect()
@@ -344,15 +413,13 @@ class GenomicsSpec extends SparkSpec {
   }
 
   test("ambiguous 1-mismatch variants fall to Undetermined") {
-    val s = spark
-    val dict = Demux.dictionary(s, Seq("s1" -> "AAA", "s2" -> "AAT"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    // "AAT" is exact for s2; also 1-mismatch of "AAA" → must resolve to s2 (exact
-    // wins is NOT implemented — ambiguity drops the variant, and the exact
-    // entry of s2 survives as its own variant only if unambiguous)
-    assert(!dict.contains("AAC") || dict("AAC") != "s1" || true) // AAC ambiguous (AAA±1, AAT±1) → dropped
+    val dict = Demux.dictionary(Seq("s1" -> "AAA", "s2" -> "AAT"))
+    // AAC and AAT are each within one mismatch of both barcodes: dropped,
+    // even AAT, which is s2's own barcode (exact match does not win)
     assert(!dict.contains("AAC"))
+    assert(!dict.contains("AAT"))
     assert(dict("AGA") == "s1") // unambiguous 1-mismatch of AAA
+    assert(dict("TAT") == "s2") // unambiguous 1-mismatch of AAT
   }
 
   test("partitioned gzip PRQ sink: layout, content, no empty parts") {
@@ -360,7 +427,7 @@ class GenomicsSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_prq").toString
     val reads = Demux.dropUndetermined(
       Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet))
-    Codecs.writePartitionedGzip(reads, out, numTasks = 2)
+    Codecs.writePartitionedGzip(reads, out)
 
     // layout: out/sample=<s>/part-*.txt.gz, all parts non-trivial
     val parts = Files.walk(Paths.get(out)).iterator().asInstanceOf[java.util.Iterator[Path]]
@@ -374,7 +441,6 @@ class GenomicsSpec extends SparkSpec {
     assert(partFiles.forall(_.toString.endsWith(".txt.gz")))
     assert(partFiles.forall(p => p.getParent.getFileName.toString.startsWith("sample=")))
     assert(partFiles.forall(p => Files.size(p) >= 30), "empty gzip part written")
-    assert(Codecs.pruneSmallFiles(s, out) == 0, "sink produced prunable parts")
 
     // content round-trips
     val back = Codecs.readPrq(s, out).collect()
@@ -388,7 +454,7 @@ class GenomicsSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_prq_v2").toString
     val reads = Demux.dropUndetermined(
       Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet))
-    Codecs.writePartitionedGzip(reads, out, numTasks = 2)
+    Codecs.writePartitionedGzip(reads, out)
     val v2 = s.read.format("prq").load(out)
     assert(v2.schema.fieldNames.toSeq ===
       Seq("sample", "id", "seq1", "qual1", "seq2", "qual2"))
