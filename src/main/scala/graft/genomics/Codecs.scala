@@ -6,8 +6,11 @@ import org.apache.hadoop.io.compress.zlib.ZlibCompressor
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** PRQ / FASTQ line codecs and the partitioned gzip sink (SURVEY §2A
-  * R6/R7/R14/R16).
+/** The PRQ line, its one writer — the partitioned gzip sink — and the
+  * sink's partition listing (SURVEY §2A R6/R7/R9), plus the FASTQ filename
+  * grammar (R14). Both line formats are read by their DataSource V2
+  * readers, `format("prq")` and `format("fastq")`
+  * ([[graft.sources.PrqFastqSource]]); FASTQ is written outside the engine.
   */
 object Codecs {
 
@@ -16,11 +19,6 @@ object Codecs {
     * `workflow.py:35`). */
   def toPrqLine(r: PrqRead): String =
     s"${r.id}\t${r.seq1}\t${r.qual1}\t${r.seq2}\t${r.qual2}"
-
-  def parsePrqLine(line: String): (String, String, String, String, String) = {
-    val f = line.split('\t')
-    (f(0), f(1), f(2), f(3), f(4))
-  }
 
   /** gzip level of the PRQ intermediate: zlib's fastest, the level the
     * reference's single-node arm runs bcl2fastq at
@@ -64,16 +62,6 @@ object Codecs {
   private val zlibLevelName: String =
     ZlibCompressor.CompressionLevel.values()(PrqGzipLevel).name
 
-  /** Read a PRQ directory written by `writePartitionedGzip` back to rows;
-    * the `sample=` partition column is restored by the scan. */
-  def readPrq(spark: SparkSession, dir: String): Dataset[(String, String)] = {
-    import spark.implicits._
-    spark.read.text(dir)
-      .select(input_file_name().as("file"), col("value"))
-      .withColumn("sample", regexp_extract(col("file"), "sample=([^/]+)/", 1))
-      .select(col("sample"), col("value")).as[(String, String)]
-  }
-
   /** Partition-value escaping, matching what the `partitionBy("sample")`
     * sink writes into directory names (Hive-style path escaping). */
   def escapePartitionValue(v: String): String =
@@ -81,8 +69,8 @@ object Codecs {
 
   /** R9 as the reference does it (`workflow.py:398-405`): a driver-side
     * listing of the sink's `sample=<s>/` partition directories — no data
-    * scan — with the same name filter as `Demux.discoverSamples` (no
-    * `_`-prefix, no unknown/undetermined). Listed through the Hadoop
+    * scan — with the reference's name filter (no `_`-prefix, no
+    * unknown/undetermined). Listed through the Hadoop
     * FileSystem API so any scheme the sink can write (hdfs://, s3a://,
     * file://) lists the same way — the reference's `phdfs.lsl`. */
   def listSamplePartitions(spark: SparkSession, prqDir: String): Seq[String] = {
@@ -97,22 +85,6 @@ object Codecs {
       val l = s.toLowerCase
       !s.startsWith("_") && !l.contains("unknown") && !l.contains("undetermined")
     }.sorted
-  }
-
-  /** R16/R14: FASTQ 4-line records → (id, seq, qual). Gzip text files are
-    * unsplittable, so each input file arrives as one partition and the
-    * 4-line grouping inside `mapPartitions` is safe; for splittable inputs
-    * this codec must be fed per-file partitions (`wholetext` or a
-    * repartition by file). */
-  def parseFastq(lines: Dataset[String]): Dataset[(String, String, String)] = {
-    import lines.sparkSession.implicits._
-    lines.mapPartitions { it =>
-      it.grouped(4).map { g =>
-        require(g.length == 4 && g(0).startsWith("@"),
-          s"malformed FASTQ record: ${g.headOption.getOrElse("")}")
-        (g(0).substring(1), g(1), g(3))
-      }
-    }
   }
 
   /** FASTQ filename grammar (R14, `baseline_workflow.py:109-117`):

@@ -50,15 +50,4 @@ object Demux {
   /** R8: drop the Undetermined pseudo-sample before alignment. */
   def dropUndetermined(reads: Dataset[PrqRead]): Dataset[PrqRead] =
     reads.filter(col("sample") =!= Undetermined)
-
-  /** R9: sample discovery over a demuxed dataset — distinct sample names,
-    * excluding `_`-prefixed and unknown/undetermined (the reference's name
-    * filter, `workflow.py:398-405`). */
-  def discoverSamples(reads: Dataset[PrqRead]): Seq[String] =
-    reads.select("sample").distinct()
-      .where(!(col("sample").startsWith("_") ||
-               lower(col("sample")).contains("unknown") ||
-               lower(col("sample")).contains("undetermined")))
-      .as[String](org.apache.spark.sql.Encoders.STRING)
-      .collect().toSeq.sorted
 }

@@ -10,10 +10,11 @@ import org.apache.spark.sql.Dataset
   *
   * This is the reference's per-sample `seal seqal` / `bwa mem` fan-out
   * (`workflow.py:491-503`, `baseline_workflow.py:143-147`) turned into a
-  * partition-level operator: repartition by sample first and every sample's
-  * reads flow through its own process instances, concurrently across the
-  * cluster — the fan-out and the "monitored join" (R11) collapse into
-  * Spark's own task scheduling and fail-fast retry.
+  * partition-level operator: `Pipeline.run` reads each sample's PRQ
+  * partition on its own (`Pipeline.readSamplePrq`) and pipes it, so every
+  * sample's reads flow through its own process instances, concurrently
+  * across the cluster — the fan-out and the "monitored join" (R11)
+  * collapse into Spark's own task scheduling and fail-fast retry.
   *
   * Failure contract (R11, `workflow.py:464-471`): a nonzero exit code throws
   * in the task (with the tail of the process's stderr in the message) →
@@ -31,9 +32,9 @@ import org.apache.spark.sql.Dataset
   *    reading only part of its stdin would silently truncate output — that
   *    case surfaces as an error instead.
   *
-  * Output is consumed lazily in both operators: stdout rows flow straight
-  * into the downstream iterator without materializing a partition's (or a
-  * sample's — tens of GB for a real aligner) output in memory.
+  * Output is consumed lazily: stdout rows flow straight into the
+  * downstream iterator without materializing a partition's output (tens
+  * of GB for a real aligner) in memory.
   */
 object ExternalProcessMap {
 
@@ -149,25 +150,12 @@ object ExternalProcessMap {
     }
   }
 
+  /** One process per non-empty partition of `lines`, its stdout lines as
+    * the partition's output. */
   def pipePartitions(lines: Dataset[String], cmd: Seq[String]): Dataset[String] = {
     import lines.sparkSession.implicits._
     lines.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty else pipe(it, cmd, "partition")
     }
-  }
-
-  /** Per-sample isolated pipe (R10): one process per sample key; output rows
-    * stream lazily from the process (a sample's SAM never sits in memory).
-    * Contract: one sample = one task — re-shard upstream by (sample, salt)
-    * and use `pipePartitions` when a single sample's reads exceed what one
-    * task should own.
-    */
-  def pipeBySample(reads: Dataset[PrqRead], cmd: Seq[String]): Dataset[(String, String)] = {
-    import reads.sparkSession.implicits._
-    reads.map(r => (r.sample, Codecs.toPrqLine(r)))
-      .groupByKey(_._1)
-      .flatMapGroups { (sample: String, rows: Iterator[(String, String)]) =>
-        pipe(rows.map(_._2), cmd, s"sample=$sample").map(sample -> _)
-      }
   }
 }

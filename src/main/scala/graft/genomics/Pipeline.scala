@@ -48,7 +48,7 @@ object Pipeline {
     * DataSource V2 ([[graft.sources.PrqDataSource]] — one InputPartition
     * per gzip file) and re-joins the tab line the external aligner
     * consumes; field-split + rejoin is the identity on well-formed PRQ, so
-    * the piped bytes are unchanged vs the old text scan. */
+    * the piped bytes are the sink's lines. */
   def readSamplePrq(spark: SparkSession, prqDir: String, sample: String): Dataset[String] = {
     import spark.implicits._
     spark.read.format("prq")

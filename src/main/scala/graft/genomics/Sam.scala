@@ -47,8 +47,9 @@ object Sam {
     lines.filter(l => !isHeader(l)).map(parseLine)
   }
 
-  /** (sample, SAM line) pairs — `ExternalProcessMap.pipeBySample` output —
-    * to a typed frame with the sample as leading column. */
+  /** (sample, SAM line) pairs — each sample's `ExternalProcessMap
+    * .pipePartitions` output tagged with its sample — to a typed frame with
+    * the sample as leading column. */
   def fromAligned(aligned: Dataset[(String, String)]): DataFrame = {
     import aligned.sparkSession.implicits._
     aligned.filter(t => !isHeader(t._2))

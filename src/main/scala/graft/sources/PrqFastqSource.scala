@@ -21,24 +21,24 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 readers for the two genomics line formats — the
   * `TableProvider` rung of the extension-point ladder (SURVEY §1.4 D3,
   * §4.3): `spark.read.format("prq").load(dir)` and
-  * `spark.read.format("fastq").load(dir)` replace the
-  * `spark.read.text + mapPartitions` composition with a planned scan.
+  * `spark.read.format("fastq").load(dir)` are the engine's only readers of
+  * these formats. Both are read-only: PRQ is written by
+  * [[graft.genomics.Codecs.writePartitionedGzip]], FASTQ outside the engine
+  * (bcl2fastq in the reference's baseline arm).
   *
-  * What the V2 surface buys over the text+parse composition:
+  * What the V2 surface buys over a `spark.read.text` + parse composition:
   *   - COLUMN PRUNING reaches the reader ([[SupportsPushDownRequiredColumns]]):
   *     a count or id-only projection never materializes seq/qual strings
   *     (the bulk of every record) — visible as ReadSchema in explain.
   *   - The `sample=` partition value is decoded once per FILE on the
   *     driver, not regex-extracted from `input_file_name()` per ROW.
   *   - One InputPartition per file, so gzip's unsplittability is a
-  *     planning fact rather than a comment on the parser ([[Codecs
-  *     .parseFastq]]'s caveat); a 1000-file sample fans out to 1000 tasks
-  *     with no shuffle.
+  *     planning fact (a 4-line FASTQ record never straddles a split); a
+  *     1000-file sample fans out to 1000 tasks with no shuffle.
   *
   * Formats (reference `workflow.py:35`, Seal's prq; FASTQ per spec):
   *   - PRQ: one read pair per line, `id\tseq1\tqual1\tseq2\tqual2`, laid
-  *     out as `dir/sample=<s>/part-*.txt[.gz]` by [[graft.genomics.Codecs
-  *     .writePartitionedGzip]].
+  *     out as `dir/sample=<s>/part-*.txt[.gz]`.
   *   - FASTQ: 4-line records `@id / seq / + / qual`, one file = one
   *     sequential stream (possibly gzip).
   *
@@ -103,36 +103,57 @@ class SerializableHadoopConf(@transient var value: Configuration) extends Serial
 /** One file = one partition (gzip text is a sequential stream). */
 case class LineFilePartition(file: String, sample: String) extends InputPartition
 
-abstract class LineFileTable(spark: SparkSession, path: String)
+/** A `format(<name>)` source over one line format: a read-only table of
+  * fixed schema at the load path, read by `factory`'s readers. */
+abstract class LineFileSource(
+    name: String, fixedSchema: StructType,
+    factory: (Array[String], SerializableHadoopConf) => PartitionReaderFactory)
+    extends TableProvider with DataSourceRegister {
+  override def shortName(): String = name
+  // a user-supplied schema fails at load, before any record is read
+  override def supportsExternalMetadata(): Boolean = false
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = fixedSchema
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: util.Map[String, String]): Table = {
+    val path = Option(properties.get("path")).getOrElse(
+      throw new IllegalArgumentException(s"$name source requires a path"))
+    new LineFileTable(SparkSession.active, s"$name:$path", path, fixedSchema, factory)
+  }
+}
+
+class LineFileTable(
+    spark: SparkSession, tableName: String, path: String, tableSchema: StructType,
+    factory: (Array[String], SerializableHadoopConf) => PartitionReaderFactory)
     extends Table with SupportsRead {
+  override def name(): String = tableName
+  override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // match the text source's analysis-time contract: a missing path is a
     // LOUD error, not an empty scan (a typo'd sample partition must abort
-    // the run, not silently feed the aligner zero records). Checked at
-    // scan-build, not table-build — a WRITE to a fresh directory is fine.
+    // the run, not silently feed the aligner zero records)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root))
       throw new IllegalArgumentException(s"Path does not exist: $path")
     new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: StructType = schema()
+      private var required: StructType = tableSchema
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
-      override def build(): Scan = buildScan(required)
+      override def build(): Scan = new Scan with Batch {
+        override def readSchema(): StructType = required
+        override def toBatch: Batch = this
+        override def planInputPartitions(): Array[InputPartition] =
+          PrqFastqSource.listFiles(spark, path)
+            .map { case (f, s) => LineFilePartition(f, s): InputPartition }.toArray
+        override def createReaderFactory(): PartitionReaderFactory =
+          factory(required.fieldNames,
+            new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+      }
     }
   }
-
-  protected def buildScan(required: StructType): Scan
-
-  protected def planPartitions(): Array[InputPartition] =
-    PrqFastqSource.listFiles(spark, path)
-      .map { case (f, s) => LineFilePartition(f, s): InputPartition }.toArray
-
-  protected def serializableConf(): SerializableHadoopConf =
-    new SerializableHadoopConf(spark.sessionState.newHadoopConf())
 }
 
 /** Base reader: codec-decoded line stream over one file. */
@@ -151,36 +172,8 @@ abstract class LineFileReader(part: LineFilePartition, conf: Configuration)
 
 // ---------------------------------------------------------------- PRQ ----
 
-class PrqDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "prq"
-  override def supportsExternalMetadata(): Boolean = false
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PrqFastqSource.prqSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val path = Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException("prq source requires a path"))
-    new LineFileTable(SparkSession.active, path)
-        with org.apache.spark.sql.connector.catalog.SupportsWrite {
-      override def name(): String = s"prq:$path"
-      override def schema(): StructType = PrqFastqSource.prqSchema
-      override def capabilities(): util.Set[TableCapability] =
-        util.EnumSet.of(TableCapability.BATCH_READ,
-          TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-      override protected def buildScan(required: StructType): Scan = new Scan with Batch {
-        override def readSchema(): StructType = required
-        override def toBatch: Batch = this
-        override def planInputPartitions(): Array[InputPartition] = planPartitions()
-        override def createReaderFactory(): PartitionReaderFactory =
-          PrqReaderFactory(required.fieldNames, serializableConf())
-      }
-      override def newWriteBuilder(
-          info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-          : org.apache.spark.sql.connector.write.WriteBuilder =
-        new PrqWriteBuilder(path, info, serializableConf())
-    }
-  }
-}
+class PrqDataSource
+    extends LineFileSource("prq", PrqFastqSource.prqSchema, PrqReaderFactory(_, _))
 
 case class PrqReaderFactory(fields: Array[String], conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
@@ -216,61 +209,8 @@ case class PrqReaderFactory(fields: Array[String], conf: SerializableHadoopConf)
 
 // -------------------------------------------------------------- FASTQ ----
 
-class FastqDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "fastq"
-  // reads are per-READ rows (file,id,seq,qual); writes take PAIR rows
-  // (sample,id,seq1,qual1,seq2,qual2) and mate-split them into R1/R2
-  // files — the schemas differ, so the provider accepts the external
-  // (write-side) schema and validates it is one of the two shapes
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PrqFastqSource.fastqSchema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val path = Option(properties.get("path")).getOrElse(
-      throw new IllegalArgumentException("fastq source requires a path"))
-    val names = schema.fieldNames.toSet
-    require(
-      names.subsetOf(PrqFastqSource.fastqSchema.fieldNames.toSet) ||
-      ("sample" +: FastqWrite.FieldOrder).forall(names.contains),
-      s"fastq table schema must be the read shape " +
-      s"(${PrqFastqSource.fastqSchema.fieldNames.mkString(",")}) or the " +
-      s"pair write shape (sample,${FastqWrite.FieldOrder.mkString(",")}); " +
-      s"got ${schema.fieldNames.mkString(",")}")
-    val tableSchema = schema
-    new LineFileTable(SparkSession.active, path)
-        with org.apache.spark.sql.connector.catalog.SupportsWrite {
-      override def name(): String = s"fastq:$path"
-      // the externally-passed schema: fastqSchema on the read path (via
-      // inferSchema), the validated pair shape on the write path
-      override def schema(): StructType = tableSchema
-      override def capabilities(): util.Set[TableCapability] =
-        util.EnumSet.of(TableCapability.BATCH_READ,
-          TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
-      override protected def buildScan(required: StructType): Scan = {
-        // the pair shape is WRITE-only: a read planned with it would
-        // MatchError record-by-record in the reader — fail at plan time
-        val bad = required.fieldNames
-          .filterNot(PrqFastqSource.fastqSchema.fieldNames.contains)
-        require(bad.isEmpty,
-          s"fastq reads use schema (${PrqFastqSource.fastqSchema.fieldNames
-            .mkString(",")}); the pair shape is write-only — " +
-          s"unreadable columns: ${bad.mkString(",")}")
-        new Scan with Batch {
-          override def readSchema(): StructType = required
-          override def toBatch: Batch = this
-          override def planInputPartitions(): Array[InputPartition] = planPartitions()
-          override def createReaderFactory(): PartitionReaderFactory =
-            FastqReaderFactory(required.fieldNames, serializableConf())
-        }
-      }
-      override def newWriteBuilder(
-          info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-          : org.apache.spark.sql.connector.write.WriteBuilder =
-        new FastqWriteBuilder(path, info, serializableConf())
-    }
-  }
-}
+class FastqDataSource
+    extends LineFileSource("fastq", PrqFastqSource.fastqSchema, FastqReaderFactory(_, _))
 
 case class FastqReaderFactory(fields: Array[String], conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
@@ -284,7 +224,7 @@ case class FastqReaderFactory(fields: Array[String], conf: SerializableHadoopCon
         if (l0 == null) return false
         val l1 = lines.readLine(); val l2 = lines.readLine()
         val l3 = lines.readLine()
-        // same contract as Codecs.parseFastq: 4 lines, @-header, +-separator
+        // 4 lines, @-header, +-separator
         require(l3 != null && l0.startsWith("@") && l2.startsWith("+"),
           s"malformed FASTQ record in ${p.file}: ${l0.take(80)}")
         val vals = fields.map {

@@ -343,6 +343,20 @@ class GenomicsSpec extends SparkSpec {
       Bcl.applyFilter(Bcl.decodeRun(spark, shapeRun, SyntheticRun.rs)),
       SyntheticRun.sheet))
 
+  private type PairRow = (String, String, String, String, String, String)
+
+  /** The sink's input as sorted (sample, id, seq1, qual1, seq2, qual2). */
+  private def pairRows(reads: org.apache.spark.sql.Dataset[PrqRead]): Seq[PairRow] =
+    reads.collect().map(r => (r.sample, r.id, r.seq1, r.qual1, r.seq2, r.qual2))
+      .sorted.toSeq
+
+  /** A PRQ directory read back through `format("prq")`, sorted like
+    * [[pairRows]]. */
+  private def prqRows(dir: String): Seq[PairRow] =
+    spark.read.format("prq").load(dir).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4), r.getString(5))).sorted.toSeq
+
   /** Part files of a PRQ sink directory, by sample. */
   private def partsBySample(dir: String): Map[String, Seq[Path]] = {
     val it = Files.walk(Paths.get(dir)).iterator()
@@ -377,7 +391,7 @@ class GenomicsSpec extends SparkSpec {
     }
   }
 
-  test("both PRQ sinks write level-1 gzip") {
+  test("the PRQ sink writes level-1 gzip") {
     import java.util.zip.{Deflater, GZIPInputStream}
     // gzip = 10-byte header + raw deflate + 8-byte trailer; the deflate
     // length pins the level (at the default level 6 these parts are ~15 %
@@ -393,14 +407,11 @@ class GenomicsSpec extends SparkSpec {
       d.end()
       n
     }
-    val reads = assignedReads
-    val manual = Files.createTempDirectory("graft_sink_level").toString
-    Codecs.writePartitionedGzip(reads, manual)
-    val v2 = Files.createTempDirectory("graft_sink_level_v2").toString
-    reads.toDF().select("sample", "id", "seq1", "qual1", "seq2", "qual2")
-      .write.format("prq").mode("overwrite").save(v2)
-    for (dir <- Seq(manual, v2); p <- partsBySample(dir).values.flatten)
-      assert(Files.size(p) === 18 + deflatedAtLevel1(p), p)
+    val out = Files.createTempDirectory("graft_sink_level").toString
+    Codecs.writePartitionedGzip(assignedReads, out)
+    val parts = partsBySample(out).values.flatten
+    assert(parts.nonEmpty)
+    for (p <- parts) assert(Files.size(p) === 18 + deflatedAtLevel1(p), p)
   }
 
   test("chastity filter + demux assigns samples with 1-mismatch tolerance") {
@@ -423,7 +434,6 @@ class GenomicsSpec extends SparkSpec {
   }
 
   test("partitioned gzip PRQ sink: layout, content, no empty parts") {
-    val s = spark
     val out = Files.createTempDirectory("graft_prq").toString
     val reads = Demux.dropUndetermined(
       Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet))
@@ -442,14 +452,13 @@ class GenomicsSpec extends SparkSpec {
     assert(partFiles.forall(p => p.getParent.getFileName.toString.startsWith("sample=")))
     assert(partFiles.forall(p => Files.size(p) >= 30), "empty gzip part written")
 
-    // content round-trips
-    val back = Codecs.readPrq(s, out).collect()
+    // content round-trips: the reader gives back exactly the written rows
+    val back = prqRows(out)
+    assert(back === pairRows(reads))
     assert(back.length == 5)
-    val s1 = back.filter(_._1 == "sample1").map(_._2).sorted
-    assert(s1.exists(_.startsWith("1_1101_0\tACGT\t")))
   }
 
-  test("prq DataSource V2: scan parity with readPrq, pruning, sample column") {
+  test("prq DataSource V2: scan parity, pruning, sample column") {
     val s = spark
     val out = Files.createTempDirectory("graft_prq_v2").toString
     val reads = Demux.dropUndetermined(
@@ -458,16 +467,10 @@ class GenomicsSpec extends SparkSpec {
     val v2 = s.read.format("prq").load(out)
     assert(v2.schema.fieldNames.toSeq ===
       Seq("sample", "id", "seq1", "qual1", "seq2", "qual2"))
-    // row parity with the text+parse composition (same 5 reads)
-    val viaText = Codecs.readPrq(s, out).collect()
-      .map { case (sm, line) =>
-        val f = Codecs.parsePrqLine(line); (sm, f._1, f._2, f._3, f._4, f._5) }
-      .sorted.toSeq
-    val viaV2 = v2.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4), r.getString(5))).sorted.toSeq
-    assert(viaV2 === viaText)
-    assert(viaV2.length === 5)
+    // row parity with the written reads (same 5 reads)
+    val written = pairRows(reads)
+    assert(prqRows(out) === written)
+    assert(written.length === 5)
     // column pruning reaches the scan: an id-only projection's ReadSchema
     // carries no seq/qual fields
     val pruned = v2.select("id")
@@ -477,40 +480,7 @@ class GenomicsSpec extends SparkSpec {
     assert(pruned.collect().map(_.getString(0)).sorted.head.nonEmpty)
     // partition-value decoding: per-sample filters work
     assert(v2.where(org.apache.spark.sql.functions.col("sample") === "sample1").count() ===
-      viaText.count(_._1 == "sample1"))
-  }
-
-  test("prq V2 WRITE: layout parity with the manual sink, clustered shuffle, overwrite") {
-    val s = spark
-    val reads = Demux.dropUndetermined(
-      Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet))
-    val df = reads.toDF().select("sample", "id", "seq1", "qual1", "seq2", "qual2")
-    val out = Files.createTempDirectory("graft_prq_w").toString
-    df.write.format("prq").mode("append").save(out)
-    // layout: sample=<s>/part-*.txt.gz, no staging remnants
-    val files = graft.sources.PrqFastqSource.listFiles(s, out)
-    assert(files.nonEmpty)
-    assert(files.forall(_._1.matches(".*sample=[^/]+/part-.*\\.txt\\.gz")),
-      files.mkString(","))
-    // content round-trips through the V2 reader, identical to the manual
-    // sink's content for the same rows
-    val manual = Files.createTempDirectory("graft_prq_m").toString
-    Codecs.writePartitionedGzip(reads, manual)
-    def rows(dir: String) = s.read.format("prq").load(dir).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(rows(out) === rows(manual))
-    // append mode adds; overwrite (truncate) replaces
-    df.write.format("prq").mode("append").save(out)
-    assert(s.read.format("prq").load(out).count() === 2 * df.count())
-    df.write.format("prq").mode("overwrite").save(out)
-    assert(rows(out) === rows(manual))
-    // the writer-requested distribution really clusters by sample: each
-    // written file's sample dir is disjoint per (partition, task) writer —
-    // with 2 samples and hash-clustering there is at most ONE part file
-    // per sample unless both hash to one partition
-    val bySample = graft.sources.PrqFastqSource.listFiles(s, out).groupBy(_._2)
-    assert(bySample.keySet === Set("sample1", "sample2"))
-    bySample.values.foreach(fs => assert(fs.size === 1, fs.toString))
+      written.count(_._1 == "sample1"))
   }
 
   test("RunInfo.xml parses structure, run identity, and rejects bad layouts") {
@@ -618,127 +588,6 @@ class GenomicsSpec extends SparkSpec {
       Option(e2.getCause).exists(_.getMessage.contains("coordinates")))
   }
 
-  test("prq V2 truncate commit never publishes unverified staging files") {
-    // A task attempt that dies without DataWriter.abort (executor JVM
-    // kill) leaves partial files in staging that no commit message
-    // vouches for. Drive StagedBatchWrite.commit directly with a staging
-    // dir holding verified files, a zombie partial alongside them, and a
-    // whole zombie-only sample dir — only the verified set may publish.
-    val out = Files.createTempDirectory("graft_prq_zombie")
-    val conf = new graft.sources.SerializableHadoopConf(
-      spark.sessionState.newHadoopConf())
-    val w = new graft.sources.PrqBatchWrite(out.toString,
-      org.apache.spark.sql.types.StructType(Nil), conf, "q1", truncate = true)
-    val staging = out.resolve(".spark-staging-q1")
-    def put(rel: String): Unit = {
-      val p = staging.resolve(rel)
-      Files.createDirectories(p.getParent)
-      Files.write(p, "x".getBytes); ()
-    }
-    put("sample=a/part-ok.txt.gz")       // verified below
-    put("sample=a/part-zombie.txt.gz")   // dead attempt, same sample
-    put("sample=b/part-zombie2.txt.gz")  // dead attempt, zombie-only dir
-    // pre-existing layout that truncate must replace
-    val old = out.resolve("sample=c/part-old.txt.gz")
-    Files.createDirectories(old.getParent)
-    Files.write(old, "old".getBytes)
-    w.commit(Array(graft.sources.PrqCommit(Seq("sample=a/part-ok.txt.gz"))))
-    def exists(rel: String) = Files.exists(out.resolve(rel))
-    assert(exists("sample=a/part-ok.txt.gz"))
-    assert(!exists("sample=a/part-zombie.txt.gz"), "zombie file published")
-    assert(!exists("sample=b"), "zombie-only sample dir published")
-    assert(!exists("sample=c"), "truncate kept the prior layout")
-    assert(!Files.exists(staging), "staging dir not cleaned")
-  }
-
-  test("fastq V2 WRITE: baseline grammar, positional mates, round-trip") {
-    val s = spark
-    val reads = Demux.dropUndetermined(
-      Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet))
-    val df = reads.toDF().select("sample", "id", "seq1", "qual1", "seq2", "qual2")
-    val out = Files.createTempDirectory("graft_fastq_w").toString
-    df.write.format("fastq").mode("append").save(out)
-    // filenames follow the baseline grammar the reference scans
-    // (reference baseline_workflow.py:109-117): parts[0] = sample,
-    // parts[3] = R1|R2 under '_' splits
-    val files = graft.sources.PrqFastqSource.listFiles(s, out).map(_._1)
-    assert(files.nonEmpty)
-    files.foreach { f =>
-      val name = f.split('/').last
-      assert(name.matches("[^_]+_S\\d+_L\\d{3}_R[12]_.+\\.fastq\\.gz"), name)
-      val parts = name.split('_')
-      assert(Set("sample1", "sample2").contains(parts(0)), name)
-      assert(parts(3) == "R1" || parts(3) == "R2", name)
-    }
-    // every R1 file has its R2 twin and mates align POSITIONALLY —
-    // record i of R1 and R2 carry the same read id (the grammar's
-    // pairing contract; decoded straight from the gzip streams)
-    def fastqIds(path: String): Seq[String] = {
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-        new java.util.zip.GZIPInputStream(
-          Files.newInputStream(Paths.get(new java.net.URI(path)))),
-        java.nio.charset.StandardCharsets.UTF_8))
-      try Iterator.continually(in.readLine()).takeWhile(_ != null)
-        .grouped(4).map(g => { assert(g.head.startsWith("@")); g.head.drop(1) })
-        .toList
-      finally in.close()
-    }
-    val r1s = files.filter(_.split('/').last.split('_')(3) == "R1")
-    assert(r1s.nonEmpty)
-    r1s.foreach { r1 =>
-      val r2 = r1.replaceAll("_R1_", "_R2_")
-      assert(files.contains(r2), s"missing R2 twin for $r1")
-      assert(fastqIds(r1) === fastqIds(r2), s"mate order differs: $r1")
-    }
-    // full round-trip through the V2 reader: pairs rebuilt by id match
-    // the input pair set exactly (sample derived from parts[0])
-    import org.apache.spark.sql.functions._
-    val back = s.read.format("fastq").load(out)
-      .withColumn("name", element_at(split(col("file"), "/"), -1))
-      .withColumn("sample", element_at(split(col("name"), "_"), 1))
-      .withColumn("mate", element_at(split(col("name"), "_"), 4))
-    val pairs = back.where(col("mate") === "R1")
-      .select(col("sample"), col("id"), col("seq").as("seq1"), col("qual").as("qual1"))
-      .join(back.where(col("mate") === "R2")
-        .select(col("id"), col("seq").as("seq2"), col("qual").as("qual2")), Seq("id"))
-      .select("sample", "id", "seq1", "qual1", "seq2", "qual2")
-    assert(pairs.collect().map(_.toSeq).sortBy(_.toString).toSeq ===
-      df.collect().map(_.toSeq).sortBy(_.toString).toSeq)
-    // overwrite truncates the prior flat layout
-    df.write.format("fastq").mode("overwrite").save(out)
-    assert(s.read.format("fastq").load(out).count() === 2 * df.count())
-    // a grammar-breaking sample name fails loudly, never shifts parts[3]
-    val bad = df.withColumn("sample", lit("bad_sample"))
-    intercept[Exception] {
-      bad.write.format("fastq").mode("append")
-        .save(Files.createTempDirectory("graft_fastq_bad").toString)
-    }
-    // a leading-dot sample would write files the reader's hidden-file
-    // convention silently skips — loud failure, not silent round-trip loss
-    val hidden = df.withColumn("sample", lit(".ctrl"))
-    intercept[Exception] {
-      hidden.write.format("fastq").mode("append")
-        .save(Files.createTempDirectory("graft_fastq_dot").toString)
-    }
-    // extra columns ride through (null-checks cover only consumed ones)
-    val extra = df.withColumn("notes",
-      org.apache.spark.sql.functions.lit(null).cast("string"))
-    val out2 = Files.createTempDirectory("graft_fastq_extra").toString
-    extra.write.format("fastq").mode("append").save(out2)
-    assert(s.read.format("fastq").load(out2).count() === 2 * df.count())
-    // READS with the write-only pair schema fail at PLAN time with a
-    // clear message, not a per-record MatchError on executors
-    val e = intercept[Exception] {
-      s.read.format("fastq")
-        .schema("sample string, id string, seq1 string, qual1 string, " +
-          "seq2 string, qual2 string")
-        .load(out).collect()
-    }
-    def msgs(t: Throwable): Seq[String] = Option(t).toSeq
-      .flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-    assert(msgs(e).exists(_.contains("write-only")), e.toString)
-  }
-
   test("prq V2 keeps trailing empty fields and rejects missing paths loudly") {
     val dir = Files.createTempDirectory("graft_prq_edge")
     // empty seq2/qual2 legitimately writes as trailing tabs — the reader
@@ -770,11 +619,16 @@ class GenomicsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted.toSeq
     assert(v2 === Seq(("r1", "ACGT", "IIII"), ("r2", "TTAA", "JJJJ"),
       ("r3", "GGGG", "KKKK")))
-    // parity with the mapPartitions codec on the same lines
-    val viaCodec = Codecs.parseFastq(
-      s.read.textFile(dir.resolve("a.fastq").toString))
-      .collect().sorted.toSeq
-    assert(viaCodec === v2.take(2))
+    // a user-supplied schema fails at load, during analysis, not record by
+    // record in the reader: no action runs
+    val unsupported = intercept[UnsupportedOperationException] {
+      s.read.format("fastq")
+        .schema("sample string, id string, seq1 string, qual1 string, " +
+          "seq2 string, qual2 string")
+        .load(dir.toString)
+    }
+    assert(unsupported.getMessage.contains("user-specified schema"),
+      unsupported.getMessage)
     // malformed record fails loudly
     Files.writeString(dir.resolve("bad.fastq"), "@r4\nACGT\n+\n")
     val e = intercept[Exception] {
@@ -785,20 +639,20 @@ class GenomicsSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("malformed FASTQ")), e.toString)
   }
 
-  test("sample discovery excludes Undetermined and _-prefixed names") {
-    val reads = Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet)
-    assert(Demux.discoverSamples(reads) == Seq("sample1", "sample2"))
-  }
-
   test("external-process map pipes PRQ through a mock aligner per sample") {
     val s = spark
     // mock aligner: tab→comma + ALN prefix (deterministic sed, R17 stand-in)
     val script = Files.createTempFile("mock_aligner", ".sh")
     Files.writeString(script, "#!/bin/sh\nsed 's/\\t/,/g; s/^/ALN /'\n")
     script.toFile.setExecutable(true)
-    val reads = Demux.dropUndetermined(
-      Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet))
-    val out = ExternalProcessMap.pipeBySample(reads, Seq(script.toString)).collect()
+    val prq = Files.createTempDirectory("graft_pipe_mock").toString
+    Codecs.writePartitionedGzip(Demux.dropUndetermined(
+      Demux.demux(Bcl.applyFilter(Bcl.decodeRun(spark, runDir, rs)), sheet)), prq)
+    val out = Codecs.listSamplePartitions(s, prq).flatMap { sample =>
+      ExternalProcessMap.pipePartitions(
+        Pipeline.readSamplePrq(s, prq, sample), Seq(script.toString))
+        .collect().map(sample -> _)
+    }
     assert(out.length == 5)
     assert(out.forall(_._2.startsWith("ALN ")))
     assert(out.filter(_._1 == "sample2").length == 3)
@@ -857,8 +711,8 @@ class GenomicsSpec extends SparkSpec {
 
   test("sample partition listing filters undetermined/_-prefixed and unescapes") {
     val dir = Files.createTempDirectory("graft_list")
-    for (n <- Seq("sample=s1", "sample=Undetermined", "sample=_tmp",
-                  "sample=a%20b", "_spark_metadata"))
+    for (n <- Seq("sample=s1", "sample=Undetermined", "sample=Unknown1",
+                  "sample=_tmp", "sample=a%20b", "_spark_metadata"))
       Files.createDirectories(dir.resolve(n))
     assert(Codecs.listSamplePartitions(spark, dir.toString) == Seq("a b", "s1"))
     // FS-agnostic: an explicit file:// URI must list identically (the Hadoop
@@ -967,9 +821,15 @@ class GenomicsSpec extends SparkSpec {
         "printf \"%s\\t147\\tchr1\\t%d\\t60\\t4M\\t=\\t%d\\t-8\\t%s\\t%s\\tNM:i:0\\n\", " +
         "$1, NR*10+4, NR*10, $4, $5 }'\n")
     script.toFile.setExecutable(true)
-    val reads = Demux.dropUndetermined(
-      Demux.demux(Bcl.applyFilter(Bcl.decodeRun(s, runDir, rs)), sheet))
-    val sam = Sam.fromAligned(ExternalProcessMap.pipeBySample(reads, Seq(script.toString)))
+    val prq = Files.createTempDirectory("graft_sam_prq").toString
+    Codecs.writePartitionedGzip(Demux.dropUndetermined(
+      Demux.demux(Bcl.applyFilter(Bcl.decodeRun(s, runDir, rs)), sheet)), prq)
+    val sam = Codecs.listSamplePartitions(s, prq).map { sample =>
+      Sam.fromAligned(
+        ExternalProcessMap.pipePartitions(
+          Pipeline.readSamplePrq(s, prq, sample), Seq(script.toString))
+        .map(sample -> _))
+    }.reduce(_ unionByName _)
 
     // SURVEY §1.4 D4 schema: 11 mandatory SAM fields (+ sample, tags)
     import org.apache.spark.sql.types._
@@ -1034,16 +894,16 @@ class GenomicsSpec extends SparkSpec {
     assert(e.getMessage.contains("stopped reading stdin"), e.getMessage)
   }
 
-  test("pipeBySample streams a large sample lazily through the process") {
+  test("pipePartitions streams a large partition lazily through the process") {
     val s = spark
     import s.implicits._
-    // 10^6 lines ≈ 40 MB of PRQ through `cat` — with eager materialization
-    // removed, rows flow straight to the downstream count
+    // 10^6 lines ≈ 40 MB of PRQ in one partition through `cat` — rows flow
+    // straight to the downstream count, never materialized
     val n = 1000000
-    val reads = s.range(n).map(i => PrqRead(s"id_$i", "big", "ACGT", "IIII",
-      "TGCA", "IIII", "AAA", passFilter = true, 1, 1101))
-    val out = ExternalProcessMap.pipeBySample(reads, Seq("cat"))
-    assert(out.filter(_._1 == "big").count() == n)
+    val lines = s.range(0, n, 1, 1).map(i => s"id_$i\tACGT\tIIII\tTGCA\tIIII")
+    assert(lines.rdd.getNumPartitions == 1)
+    val out = ExternalProcessMap.pipePartitions(lines, Seq("cat"))
+    assert(out.filter(_.startsWith("id_")).count() == n)
   }
 
   test("chatty stderr neither deadlocks the pipe nor is lost on failure") {
