@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark entry point. Prints the full-precision per-query JSON
   * first (also persisted to /tmp/graft_bench.json, and to BENCH_FULL.json
-  * when the run is unrestricted: no SPARK_GRAFT_ONLY, no REPEAT), then a
+  * when the run is unrestricted: no SPARK_GRAFT_ONLY), then a
   * SMALL fixed-size summary as the FINAL stdout line for the driver's
   * 2000-char tail capture. The per-query map is intentionally NOT on the
   * final line: at 172+ queries no per-query encoding fits the tail window,
@@ -129,33 +129,14 @@ object Bench {
     val calibPre = calibrate()
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run to the named queries —
     // the isolated fresh-JVM mode used to adjudicate per-query regressions
-    // without full-catalog adjacency noise. SPARK_GRAFT_REPEAT=n (default 1)
-    // measures each selected query n times; all repeats are reported as
-    // name#i so best-of-n is computable downstream.
+    // without full-catalog adjacency noise.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     only.foreach { o =>
       val missing = o -- selected.map(_._1).toSet
       require(missing.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: ${missing.mkString(",")}")
-    }
-    // SPARK_GRAFT_PRIME_DIR=<sfdir>: run each selected query once against
-    // a (tiny) priming scale factor BEFORE the measured passes. Whole-stage
-    // codegen classes are cached by generated source, which is data-size
-    // independent — priming at sf0.001 compiles a query's unique plan
-    // shapes outside the measurement window. This retired the
-    // q_llm_dedup_clusters "bimodality" (round 11, CodegenProbe): fresh-JVM
-    // first runs read 5.7–11.5 s vs 3.1–4.0 warm — ~2.5 s of Janino
-    // compilation (103 classes) plus JVM JIT, all paid once per JVM;
-    // primed first runs measure 4.02 s. Opt-in (isolated adjudication
-    // probes) — the full-catalog per-round bench stays unprimed for
-    // cross-round comparability.
-    sys.env.get("SPARK_GRAFT_PRIME_DIR").foreach { primeDir =>
-      selected.foreach { case (_, fn) =>
-        try { fn(spark, primeDir).count(); () } catch { case _: Throwable => () }
-      }
     }
     // settle barrier: collect the previous query's garbage AND give the
     // context cleaner a beat to drain broadcast/shuffle state OUTSIDE the
@@ -190,25 +171,22 @@ object Bench {
     val ContendedShare = 0.10
     // a query that THROWS must not silently contribute a fast "time" (a
     // broken query would make the bench look better) — record it and fail
-    val firstPass = selected.flatMap { case (name, fn) =>
-      (1 to repeat).map { i =>
-        settle()
-        val (t, failure, ext, la0, la1) = timed(fn)
-        val label = if (repeat == 1) name else s"$name#$i"
-        (label, name, t, failure, ext, la0, la1)
-      }
+    val firstPass = selected.map { case (name, fn) =>
+      settle()
+      val (t, failure, ext, la0, la1) = timed(fn)
+      (name, t, failure, ext, la0, la1)
     }
     // settled re-measurement, two triggers: (a) adjacency — in-catalog
     // first-pass ≥ 3 s (neighbor GC/cleaner debt, round-5 adjudication);
     // (b) contention — external CPU share over threshold (round-6: the
     // driver's artifact ran 1.5x inflated under co-running load). The min
     // of first pass and re-run is graded; both numbers are reported.
-    val fullCatalog = only.isEmpty && repeat == 1
+    val fullCatalog = only.isEmpty
     val rerunNames: Seq[String] =
       if (!fullCatalog)
-        firstPass.collect { case (_, n, _, None, ext, _, _) if ext > ContendedShare => n }.distinct
+        firstPass.collect { case (n, _, None, ext, _, _) if ext > ContendedShare => n }
       else
-        firstPass.collect { case (_, n, t, None, ext, _, _) if t >= 3.0 || ext > ContendedShare => n }.distinct
+        firstPass.collect { case (n, t, None, ext, _, _) if t >= 3.0 || ext > ContendedShare => n }
     // round-7 adjudication: one gc + 1 s before the re-runs reduced but did
     // not close the adjacency gap (driver settled values still ran ~3× the
     // isolated fresh-JVM probes). Deeper protocol: (a) three gc cycles with
@@ -232,8 +210,8 @@ object Bench {
       name -> (if (c1 <= c2) (c1, ext1) else (c2, ext2))
     }.toMap
     val contendedNames = firstPass.collect {
-      case (_, n, _, _, ext, _, _) if ext > ContendedShare => n
-    }.distinct.sorted
+      case (n, _, _, ext, _, _) if ext > ContendedShare => n
+    }.sorted
     // closing bracket of the calibration anchor: all measurement is done
     val calibPost = calibrate()
     // DRIFT TRIGGER (round 15, VERDICT r14 #3): a pre/post anchor spread
@@ -273,8 +251,8 @@ object Bench {
     // is unchanged, so cross-round total/calib_s stays comparable
     val calibS = (Seq(calibPre, calibPost) ++ calibFinal).sum /
       (2 + calibFinal.size)
-    val results = firstPass.map { case (label, name, t, failure, _, _, _) =>
-      (label, Seq(Some(t), rerun.get(name).map(_._1),
+    val results = firstPass.map { case (name, t, failure, _, _, _) =>
+      (name, Seq(Some(t), rerun.get(name).map(_._1),
         driftMin.get(name)).flatten.min, failure.isEmpty)
     }
     // 4 decimals (0.1 ms): full double repr tripled the JSON line length
@@ -286,13 +264,13 @@ object Bench {
       .mkString("[", ",", "]")
     // why each failed query failed (full artifact only; the summary line
     // keeps just the `errors` names)
-    val errDetail = firstPass.collect { case (l, _, _, Some(f), _, _, _) =>
+    val errDetail = firstPass.collect { case (l, _, Some(f), _, _, _) =>
       Verify.jsonString(l) + ":" + Verify.jsonString(f)
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val firsts = firstPass.map { case (l, _, t, _, _, _, _) => s"\"" + l + "\":" + fmt(t) }
+    val firsts = firstPass.map { case (l, t, _, _, _, _) => s"\"" + l + "\":" + fmt(t) }
       .mkString("{", ",", "}")
-    val loads = firstPass.map { case (l, _, _, _, ext, la0, la1) =>
+    val loads = firstPass.map { case (l, _, _, ext, la0, la1) =>
       s"\"" + l + "\":[" + fmt(ext, 3) + "," + fmt(la0, 2) + "," + fmt(la1, 2) + "]"
     }.mkString("{", ",", "}")
     val reruns = rerun.toSeq.sortBy(_._1).map { case (n, (t, ext)) =>
@@ -310,7 +288,7 @@ object Bench {
     // persist the full line where it survives any stdout truncation: /tmp
     // for adjudications, and — for an unrestricted full-catalog run only —
     // the repo cwd so the commit carries every per-query number into
-    // history; an isolated or repeat probe never overwrites BENCH_FULL.json
+    // history; an isolated run never overwrites BENCH_FULL.json
     val outs = "/tmp/graft_bench.json" +:
       (if (fullCatalog) Seq("BENCH_FULL.json") else Nil)
     for (p <- outs) {

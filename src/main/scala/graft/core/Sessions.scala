@@ -33,11 +33,11 @@ import org.apache.spark.sql.SparkSession
   *     and with every `newSession()` child of it; no engine code registers
   *     them (`register` in `GraftFunctions` is the fallback for a session
   *     built elsewhere).
-  *   - the path-addressed snapshot-log catalog → `spark.sql.catalog
-  *     .graftsnap` = `graft.sources.SnaplogCatalog`, so the SQL-native
-  *     snapshot queries address `graftsnap.`/path`` without writing conf
-  *     (the name-addressed `graftwh` catalog stays with its queries: its
-  *     warehouse path needs the application id, unknown before the build).
+  *   - the snapshot-log catalogs → `spark.sql.catalog.graftsnap` (path
+  *     addressed, `graftsnap.`/path``) and `spark.sql.catalog.graftwh`
+  *     (name addressed, tables under one warehouse directory per driver
+  *     JVM), both `graft.sources.SnaplogCatalog`, so the SQL-native
+  *     snapshot queries find them without writing conf.
   *
   * Cluster note (100 TB deployment): pass `master = "yarn"` (or k8s://…),
   * `executorMemMb`/`dynamicAllocation` from the submit wrapper; nothing
@@ -54,6 +54,9 @@ import org.apache.spark.sql.SparkSession
   * replays).
   */
 object Sessions {
+
+  /** Conf key of the `graftwh` catalog's warehouse directory. */
+  val WarehouseKey = "spark.sql.catalog.graftwh.warehouse"
 
   /** Engine session sizing — field-per-knob mirror of the reference's
     * GlobalConf (`workflow.py:20-31`). */
@@ -89,6 +92,10 @@ object Sessions {
       "spark.sql.extensions" -> "graft.functions.GraftExtensions",
       // path-addressed snapshot-log tables in SQL text (stateless plugin)
       "spark.sql.catalog.graftsnap" -> "graft.sources.SnaplogCatalog",
+      // name-addressed ones, in a warehouse private to this driver JVM
+      "spark.sql.catalog.graftwh" -> "graft.sources.SnaplogCatalog",
+      WarehouseKey -> (System.getProperty("java.io.tmpdir") +
+        s"/graft_wh_${ProcessHandle.current().pid()}"),
       // reliable-checkpoint hygiene (Checkpoints.reliableKey): clean a
       // checkpoint's files once its RDD is GC'd, so iterative loops
       // don't grow the checkpoint dir by one dataset copy per round

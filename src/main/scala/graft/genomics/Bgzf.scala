@@ -17,9 +17,8 @@ package graft.genomics
   * the one that reads and transposes the tile (`Bcl.decodeRun`).
   *
   * CBCL (`.cbcl`, NovaSeq per-lane concatenated container: blocked tiles
-  * + 2-bit quality BINNING + per-tile filter-excluded packing) decodes
-  * for real in [[Cbcl]] (second half of round 11); [[probeCbclHeader]]
-  * stays as the cheap header-only inspection.
+  * + 2-bit quality BINNING + per-tile filter-excluded packing) is parsed
+  * and decoded in [[Cbcl]].
   */
 object Bgzf {
 
@@ -154,36 +153,4 @@ object Bgzf {
     0x1f, 0x8b, 0x08, 0x04, 0x00, 0x00, 0x00, 0x00, 0x00, 0xff,
     0x06, 0x00, 0x42, 0x43, 0x02, 0x00, 0x1b, 0x00, 0x03, 0x00,
     0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00).map(_.toByte)
-
-  /** Parsed CBCL file header (NovaSeq per-lane blocked container). */
-  case class CbclHeader(version: Int, headerSize: Long, bitsPerBasecall: Int,
-                        bitsPerQscore: Int, nQualityBins: Long, nTiles: Long)
-
-  /** REAL parse of the CBCL header layout (public Illumina docs /
-    * picard's CbclReader): version u16 | header-size u32 | bits-per-
-    * basecall u8 | bits-per-qscore u8 | number-of-bins u32 | (bin
-    * mappings: 2·u32 each) | number-of-tile-records u32 | … . DECODING
-    * the per-tile blocks (2-bit quality binning + filter-excluded
-    * packing) is the documented stub — [[decodeCbcl]] throws loudly. */
-  def probeCbclHeader(b: Array[Byte]): CbclHeader = {
-    require(b.length >= 12, s"cbcl: ${b.length} bytes is too short for a header")
-    val version = le16(b, 0)
-    val headerSize = le32(b, 2)
-    val bitsBase = b(6) & 0xff
-    val bitsQ = b(7) & 0xff
-    val nBins = le32(b, 8)
-    val tilesOff = 12 + nBins.toInt * 8
-    require(b.length >= tilesOff + 4,
-      s"cbcl: header truncated before the tile-record count")
-    CbclHeader(version, headerSize, bitsBase, bitsQ, nBins,
-      le32(b, tilesOff))
-  }
-
-  /** CBCL per-tile decode — REAL since the second half of round 11, in
-    * [[Cbcl.decode]] (blocked tiles, 2-bit base + binned quality, and
-    * excludeNonPF expansion against the lane filter inside
-    * [[Bcl.decodeRun]]'s transpose). Kept here as a delegate next to the
-    * header probe. */
-  def decodeCbcl(b: Array[Byte]): Seq[(Int, Array[Byte], Boolean)] =
-    Cbcl.decode(b)
 }

@@ -53,8 +53,8 @@ object Cbcl {
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
       ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
 
-  /** Full header parse (supersedes the round-11 probe-only
-    * [[Bgzf.probeCbclHeader]], kept for its loud-layout message). */
+  /** Full header parse; a truncated bin table or tile-record list fails
+    * loudly. */
   def parseHeader(b: Array[Byte]): Header = {
     require(b.length >= 12, s"cbcl: ${b.length} bytes is too short for a header")
     val version = le16(b, 0)

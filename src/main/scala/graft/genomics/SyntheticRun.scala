@@ -88,8 +88,7 @@ object SyntheticRun {
 
   private def writeTile(dir: Path, lane: Int, tile: Int,
                         clusters: Seq[(String, String, String, Boolean)],
-                        bgzf: Boolean = false,
-                        bgzfBlock: Int = 16): Unit = {
+                        bgzf: Boolean): Unit = {
     val n = clusters.size
     val header = java.nio.ByteBuffer.allocate(4)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(n).array()
@@ -102,11 +101,10 @@ object SyntheticRun {
         enc(all(c - 1), 30 + (c % 10))
       }.toArray
       if (bgzf)
-        // the 16-byte default forces multiple BGZF blocks even on
-        // spec-sized tiles (the multi-block walk is really exercised);
-        // scale probes pass a realistic 64 KiB block
+        // 16-byte blocks force multiple BGZF blocks even on spec-sized
+        // tiles (the multi-block walk is really exercised)
         Files.write(cdir.resolve(f"s_${lane}_$tile.bcl.bgzf"),
-          Bgzf.compress(header ++ bytes, blockSize = bgzfBlock))
+          Bgzf.compress(header ++ bytes, blockSize = 16))
       else
         Files.write(cdir.resolve(f"s_${lane}_$tile.bcl"), header ++ bytes)
     }
@@ -121,50 +119,13 @@ object SyntheticRun {
     * `.bcl.bgzf` blocked-gzip files (GenomicsSpec pins the decode
     * byte-identical to the flat run's). */
   def writeRun(dir: Path, perTile: Int = 24, bgzf: Boolean = false,
-               bgzfBlock: Int = 16, lanes: Int = 1): Path = {
+               lanes: Int = 1): Path = {
     Files.createDirectories(dir)
     Files.writeString(dir.resolve("RunInfo.xml"), runInfoXml(lanes))
     for (lane <- 1 to lanes) {
-      writeTile(dir, lane, 1101, (0 until perTile).map(cluster), bgzf, bgzfBlock)
-      writeTile(dir, lane, 1102, (perTile until 2 * perTile).map(cluster), bgzf,
-        bgzfBlock)
+      writeTile(dir, lane, 1101, (0 until perTile).map(cluster), bgzf)
+      writeTile(dir, lane, 1102, (perTile until 2 * perTile).map(cluster), bgzf)
     }
-    dir
-  }
-
-  /** NovaSeq-shaped variant of [[writeRun]]: the same clusters packed as
-    * one `.cbcl` per cycle (both tiles, excludeNonPF layout) + the lane
-    * `.filter` files. Quality is bin-SNAPPED (CBCL is lossy) and non-PF
-    * clusters are container-dropped, so this is the scale/parity fixture
-    * for the CBCL arm, not a byte-twin of the flat run. */
-  def writeRunCbcl(dir: Path, perTile: Int = 24,
-                   bins: IndexedSeq[(Int, Int)] =
-                     IndexedSeq((0, 0), (1, 12), (2, 26), (3, 34))): Path = {
-    val tiles = Seq(1101 -> (0 until perTile).map(cluster),
-                    1102 -> (perTile until 2 * perTile).map(cluster))
-    val laneDir = dir.resolve("L001")
-    val header = java.nio.ByteBuffer.allocate(4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(perTile).array()
-    for (c <- 1 to rs.totalCycles) {
-      val cdir = laneDir.resolve(s"C$c.1")
-      Files.createDirectories(cdir)
-      val perTileCols = tiles.map { case (tileNum, clusters) =>
-        val col = clusters.map { case (r1, bc, r2, _) =>
-          val all = r1 + bc + r2
-          enc(all(c - 1), 30 + (c % 10))
-        }.toArray
-        val filt = clusters.map(cl => if (cl._4) 1.toByte else 0.toByte).toArray
-        (tileNum, col, filt)
-      }
-      Files.write(cdir.resolve("L001_1.cbcl"),
-        Cbcl.write(perTileCols, bins, excludeNonPF = true))
-    }
-    tiles.foreach { case (tileNum, clusters) =>
-      val filt = clusters.map(cl => if (cl._4) 1.toByte else 0.toByte).toArray
-      Files.write(laneDir.resolve(s"s_1_$tileNum.filter"), header ++ filt)
-      writeLocsFiles(laneDir, 1, tileNum, clusters.size)
-    }
-    Files.writeString(dir.resolve("RunInfo.xml"), runInfoXml)
     dir
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Q, Tables}
+import graft.core.{Q, Sessions, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scans, projection, filtering, distinct, set ops, sort/limit.
@@ -11,28 +11,6 @@ import org.apache.spark.sql.functions._
   * with identical output column names and a total ORDER BY (SURVEY §5.4).
   */
 object RelationalQueries {
-
-  /** The shared warehouse-backed snap catalog (`graftwh`) used by the
-    * SQL-lifecycle queries. The path-addressed `graftsnap` catalog comes
-    * with the session (`Sessions.sparkConf`); this one cannot, because
-    * its warehouse path needs the application id, unknown before the
-    * build. DETERMINISTIC per application (tmpdir + appId) and
-    * registered under a lock: catalog queries run CONCURRENTLY in
-    * Verify's pool, and a check-then-set race on the warehouse option would let the cached catalog instance capture a
-    * different warehouse than a later conf read (the table would
-    * silently resolve somewhere else). Same-value double-sets are
-    * harmless; per-table DROP IF EXISTS handles same-session re-runs. */
-  private def warehouseCatalog(s: org.apache.spark.sql.SparkSession)
-      : String = synchronized {
-    val wh = s"${System.getProperty("java.io.tmpdir")}/graft_wh_" +
-      s.sparkContext.applicationId
-    if (s.conf.getOption("spark.sql.catalog.graftwh").isEmpty) {
-      s.conf.set("spark.sql.catalog.graftwh",
-        "graft.sources.SnaplogCatalog")
-      s.conf.set("spark.sql.catalog.graftwh.warehouse", wh)
-    }
-    s.conf.get("spark.sql.catalog.graftwh.warehouse")
-  }
 
   val queries: Map[String, Q] = Map(
     // ---- scans / sources / sinks -------------------------------------
@@ -570,7 +548,7 @@ object RelationalQueries {
     // history pinning the op ledger in-flight. Result: the deleted view
     // and the restored view vs the plain closed form.
     "q_scan_snapcall" -> ((s, d) => {
-      val wh = warehouseCatalog(s)
+      val wh = s.conf.get(Sessions.WarehouseKey)
       s.sql("DROP TABLE IF EXISTS graftwh.callt")
       Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
         .where(col("doc_id") < 600).createOrReplaceTempView("graft_call_docs")
@@ -681,7 +659,6 @@ object RelationalQueries {
     // table. Driven via SQL CALL compact_files. Oracle is the closed
     // form of the union.
     "q_scan_snapbinpack" -> ((s, d) => {
-      val wh = warehouseCatalog(s)
       val tmp = java.nio.file.Files.createTempDirectory("graft_bpk")
         .toString
       val t = graft.operators.SnapshotLog.open(s, tmp, "doc_id")
@@ -699,7 +676,6 @@ object RelationalQueries {
       val bigEntry = e0.data.head
       s.sql(s"CALL graftwh.compact_files(table => '$tmp', " +
         s"small_bytes => $bigBytes)")
-      require(wh.nonEmpty) // catalog registered (CALL above used it)
       val e1 = t.readEntry(t.currentVersion())
       require(t.opOf(t.currentVersion()) == "compact-files")
       require(e1.data.contains(bigEntry),
@@ -885,7 +861,6 @@ object RelationalQueries {
     // per-partition or it does not happen. Driven via SQL CALL
     // (`partition => 'lang=en'`). Oracle is the plain closed form.
     "q_scan_snapoptpart" -> ((s, d) => {
-      val wh = warehouseCatalog(s)
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_optpart").toString
       val t = graft.operators.SnapshotLog.open(s, tmp, "doc_id")
@@ -904,7 +879,6 @@ object RelationalQueries {
       require(enBefore.size == 3, s"expected 3 en entries, got $enBefore")
       s.sql(s"CALL graftwh.optimize(table => '$tmp', num_files => 1, " +
         "partition => 'lang=en')")
-      require(wh.nonEmpty) // catalog registered (CALL above used it)
       val e1 = t.readEntry(t.currentVersion())
       require(t.opOf(t.currentVersion()) == "optimize-partition")
       require(foreign.forall(e1.data.contains),
@@ -1002,7 +976,7 @@ object RelationalQueries {
     // the SQL text. The result reads all five versions back with
     // VERSION AS OF by name; oracle is the closed form per version.
     "q_scan_snapcat2" -> ((s, d) => {
-      val wh = warehouseCatalog(s)
+      val wh = s.conf.get(Sessions.WarehouseKey)
       s.sql("DROP TABLE IF EXISTS graftwh.cat2")
       Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
         .createOrReplaceTempView("graft_cat2_docs")
@@ -1232,7 +1206,7 @@ object RelationalQueries {
     // (asserted); `DROP CONSTRAINT` re-admits. Same aggregate/oracle
     // shape as the API query.
     "q_scan_snapconstraint_sql" -> ((s, d) => {
-      val wh = warehouseCatalog(s)
+      val wh = s.conf.get(Sessions.WarehouseKey)
       s.sql("DROP TABLE IF EXISTS graftwh.cons")
       Tables.documents(s, d).select(col("doc_id"), col("n_chars"), col("lang"))
         .createOrReplaceTempView("graft_cons_docs")

@@ -462,8 +462,6 @@ object ClusterCheck {
     val sqlOk = try {
       val qroot = java.nio.file.Files
         .createTempDirectory("graft-chaos-sql").toString + "/t"
-      spark.conf.set("spark.sql.catalog.chaossnap",
-        "graft.sources.SnaplogCatalog")
       // native DSv2 batch write under the kill
       spark.range(20000)
         .select(col("id"), concat(lit("s-"), col("id")).as("v"))
@@ -473,12 +471,12 @@ object ClusterCheck {
       val tq = graft.operators.SnapshotLog.open(spark, qroot, "id")
       val wroteOnce = tq.currentVersion() == 1 && tq.read().count() == 20000L
       // SQL UPDATE — group-based COW
-      spark.sql(s"UPDATE chaossnap.`$qroot` SET v = concat('U-', v) " +
+      spark.sql(s"UPDATE graftsnap.`$qroot` SET v = concat('U-', v) " +
         "WHERE id >= 5000 AND id < 6000")
       val updOk = tq.opOf(tq.currentVersion()) == "sql-update" &&
         tq.read().where(col("v").startsWith("U-")).count() == 1000L
       // banded SQL DELETE — metadata route even mid-chaos
-      spark.sql(s"DELETE FROM chaossnap.`$qroot` WHERE id < 1000")
+      spark.sql(s"DELETE FROM graftsnap.`$qroot` WHERE id < 1000")
       val delOk = tq.opOf(tq.currentVersion()) == "delete-where" &&
         tq.read().count() == 19000L
       // SQL MERGE — COW upsert with inserts
@@ -487,7 +485,7 @@ object ClusterCheck {
         .unionByName(spark.range(40000, 40005)
           .select(col("id"), concat(lit("M-"), col("id")).as("v")))
         .createOrReplaceTempView("graft_chaos_merge_src")
-      spark.sql(s"MERGE INTO chaossnap.`$qroot` t " +
+      spark.sql(s"MERGE INTO graftsnap.`$qroot` t " +
         "USING graft_chaos_merge_src s ON t.id = s.id " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
       val mrgOk = tq.opOf(tq.currentVersion()) == "sql-merge" &&
@@ -589,7 +587,7 @@ object ClusterCheck {
         delAgg.getLong(1) == s3(10000, 11000, 3)
       // mapped SQL UPDATE + banded predicate DELETE, then closed-form
       // row-exact parity of the final table
-      spark.sql(s"UPDATE chaossnap.`$mroot` SET score = score + 1 " +
+      spark.sql(s"UPDATE graftsnap.`$mroot` SET score = score + 1 " +
         "WHERE id >= 20000 AND id < 20500")
       tm.commitDeleteWhere("id", 0, 999)
       val expected = spark.range(1000, 30000).select(col("id"),
@@ -817,11 +815,13 @@ object ClusterCheck {
         val snap = chaosSnapshotLog(spark)
         // negative probe: default (localCheckpoint) loop under a kill —
         // Spark's documented contract is a LOUD job failure (truncated
-        // lineage, unreplicated blocks), never a wrong answer
-        spark.conf.set(graft.core.Checkpoints.reliableKey, "false")
+        // lineage, unreplicated blocks), never a wrong answer; it runs
+        // in a child session so the gated session's conf stays as built
+        val unreliable = spark.newSession()
+        unreliable.conf.set(graft.core.Checkpoints.reliableKey, "false")
         val probe =
           try {
-            val (n, h, k) = chaosHash(spark, "q_graph_pagerank",
+            val (n, h, k) = chaosHash(unreliable, "q_graph_pagerank",
               sfDir, killDelayMs = 150)
             val outcome =
               if (!k) "no-kill-landed"
@@ -875,7 +875,10 @@ object ClusterCheck {
       extra = Map(
         "spark.executor.memory" -> "2048m",
         "spark.executor.extraClassPath" -> absCp,
-        "spark.executor.extraJavaOptions" -> addOpens)))
+        "spark.executor.extraJavaOptions" -> addOpens,
+        // the TopK shape below spills at this bound; the sketch shape
+        // plans no TopK operator
+        graft.plans.TopKPerGroupStrategy.maxGroupsKey -> "65536")))
     try {
       import org.apache.spark.sql.functions._
       val nGroups = 1000000L
@@ -904,7 +907,6 @@ object ClusterCheck {
       // group g over values {g, g+nG, …, g+(per−1)·nG} must emit
       // exactly (g+(per−1)·nG, rn=1), (g+(per−2)·nG, rn=2).
       graft.plans.TopK.install(spark)
-      spark.conf.set(graft.plans.TopKPerGroupStrategy.maxGroupsKey, "65536")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("g")).orderBy(col("v").desc)
       val topk = spark.range(nGroups * perGroup)

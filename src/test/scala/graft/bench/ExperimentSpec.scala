@@ -105,6 +105,8 @@ class ExperimentSpec extends AnyFunSuite {
     assert(solo("spark.sql.adaptive.enabled") == "true")
     assert(solo("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(solo("spark.sql.catalog.graftsnap") == "graft.sources.SnaplogCatalog")
+    assert(solo("spark.sql.catalog.graftwh") == "graft.sources.SnaplogCatalog")
+    assert(solo(Sessions.WarehouseKey).nonEmpty)
     // the sandbox conf honors SPARK_GRAFT_CPUS-default sizing contract
     val loc = Sessions.local(defaultCpus = 4)
     assert(loc.master.startsWith("local["))

@@ -147,8 +147,6 @@ class GenomicsSpec extends SparkSpec {
     val snapped = Cbcl.decode(Cbcl.write(
       Seq((1, lossy, Array(1.toByte))), cbclBins, excludeNonPF = false))
     assert((snapped.head._2(0) >> 2) === 26 && (snapped.head._2(0) & 3) === 2)
-    // the probe-only header view stays consistent
-    assert(Bgzf.probeCbclHeader(file).nTiles === 2L)
   }
 
   test("CBCL excludeNonPF: PF-only payload expands against the filter") {

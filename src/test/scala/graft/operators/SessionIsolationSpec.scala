@@ -136,7 +136,9 @@ class SessionIsolationSpec extends SparkSpec {
     val s = spark.newSession()
     val before = s.conf.getAll
     Seq("q_scan_snapcat", "q_scan_snapmergevolve", "q_scan_snapwiden",
-        "q_scan_snapdml_sql", "q_scan_merge_sql").foreach { q =>
+        "q_scan_snapdml_sql", "q_scan_merge_sql", "q_scan_snapcall",
+        "q_scan_snapbinpack", "q_scan_snapoptpart", "q_scan_snapcat2",
+        "q_scan_snapconstraint_sql").foreach { q =>
       assert(RelationalQueries.queries(q)(s, sf0001).count() > 0, q)
     }
     assertConfIs(s, before)
