@@ -1,23 +1,68 @@
 package graft.core
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md / FIXTURES.md §A).
   *
   * Every query in the catalog receives `(spark, sfDir)` and reads only through
   * these loaders, so partition/pushdown behavior is uniform: one parquet file
-  * per table, schema inferred from parquet footers, filters and column pruning
-  * pushed into the scan by Catalyst.
+  * per table, schema inferred from parquet footers once per file version,
+  * filters and column pruning pushed into the scan by Catalyst.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Qualified path → (length, modification time, schema) of the file
+    * version the schema was inferred from; shared by every session in the
+    * JVM. Every session is built from `Sessions.sparkConf`, which fixes the
+    * parquet inference settings (`nanosAsLong`), so the key carries no
+    * conf. */
+  private val schemas = new ConcurrentHashMap[String, (Long, Long, StructType)]()
+
+  /** Read `dir/name.parquet`. Inferring a parquet schema runs a Spark job
+    * over the footers; it runs once per file version: while the path's
+    * length and modification time are unchanged, the load reads with the
+    * cached schema and runs no job. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val status =
+      try Some(fs.getFileStatus(path))
+      catch { case _: FileNotFoundException => None }
+    status match {
+      case None => spark.read.parquet(path.toString) // its own missing-path error
+      case Some(st) =>
+        val key = st.getPath.toString
+        val (len, mtime) = version(fs, st)
+        Option(schemas.get(key)) match {
+          case Some((`len`, `mtime`, schema)) =>
+            spark.read.schema(schema).parquet(path.toString)
+          case _ =>
+            val df = spark.read.parquet(path.toString)
+            schemas.put(key, (len, mtime, df.schema))
+            df
+        }
+    }
+  }
+
+  /** (length, modification time) of a file; of a directory, the total
+    * length of the files under it and the latest modification time of it
+    * and everything under it (a rewrite replaces the part files). Walks
+    * with `listStatus`, which loads no permissions or block locations. */
+  private def version(fs: FileSystem, st: FileStatus): (Long, Long) =
+    if (!st.isDirectory) (st.getLen, st.getModificationTime)
+    else fs.listStatus(st.getPath).map(version(fs, _))
+      .foldLeft((0L, st.getModificationTime)) { case ((l, m), (cl, cm)) =>
+        (l + cl, math.max(m, cm))
+      }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

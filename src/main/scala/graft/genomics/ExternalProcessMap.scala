@@ -22,7 +22,8 @@ import org.apache.spark.sql.Dataset
   * partitions — the kill-all semantics of the reference's `_wait`.
   *
   * Pipe hygiene (the three classic subprocess deadlocks/losses):
-  *  - stdin is fed from a separate writer thread (no write/read deadlock);
+  *  - stdin is fed from a separate writer thread (no write/read deadlock),
+  *    which runs with the task's `TaskContext`, as `PipedRDD`'s does;
   *  - stderr is drained concurrently into a bounded tail buffer — a chatty
   *    aligner can emit unbounded diagnostics without ever filling the ~64 KB
   *    pipe and wedging the task;
@@ -60,9 +61,10 @@ object ExternalProcessMap {
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(false)
     val proc = pb.start()
+    val context = org.apache.spark.TaskContext.get()
     // job cancellation (Pipeline's kill-all) must also kill the aligner —
     // the reference's `_wait` kills child processes, not just the driver loop
-    Option(org.apache.spark.TaskContext.get()).foreach(
+    Option(context).foreach(
       _.addTaskCompletionListener[Unit](_ => proc.destroyForcibly()))
 
     // stderr drain: consume everything, keep only the tail for diagnostics
@@ -89,6 +91,9 @@ object ExternalProcessMap {
 
     val writerError = new AtomicReference[Throwable](null)
     val writer = new Thread(() => {
+      // pulling `input` may open a partition reader (a coalesced scan opens
+      // one per file), which needs the task's context on this thread
+      if (context != null) org.apache.spark.GraftTaskContext.set(context)
       val w = new BufferedWriter(
         new OutputStreamWriter(proc.getOutputStream, "UTF-8"))
       try {

@@ -3,6 +3,7 @@ package graft.operators
 import graft.core.GraftCheckpointOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Corpus-preparation operators for LLM training pipelines (SURVEY §2B
   * north-star), alongside [[Dedup]]: exact-span (substring) duplicate
@@ -856,19 +857,6 @@ object CorpusOps {
         expr(s"__start % $budgetTokens").as("offset"))
   }
 
-  /** BPE tokenizer training (Sennrich et al., ACL'16 — word-level byte-pair
-    * encoding): learn `nMerges` merge rules from corpus word frequencies.
-    * Returns the merge table (rank, left, right, freq), rank 1 first.
-    *
-    * Scale shape: the ONLY corpus-sized operation is the initial word-count
-    * shuffle; every merge iteration runs on the vocabulary-sized
-    * word-frequency table (distinct words — millions of rows at 100 TB, not
-    * corpus-sized). Per iteration: one pair-count aggregate + a driver
-    * argmax of a single row (the learned rule IS driver-sized, like IVF
-    * centroids), then a map-side greedy merge of the symbol arrays via an
-    * `aggregate` HOF fold (codegen'd, no UDF). Lineage is truncated with a
-    * localCheckpoint every few merges. Ties break deterministically:
-    * highest count, then lexicographic (left, right). */
   /** Unigram-LM tokenizer training — the EM half of SentencePiece (Kudo
     * 2018), the other major tokenizer family next to [[bpeTrain]].
     *
@@ -964,6 +952,21 @@ object CorpusOps {
       .toDF("doc_id", "n_pieces", "pieces")
   }
 
+  /** BPE tokenizer training (Sennrich et al., ACL'16 — word-level byte-pair
+    * encoding): learn `nMerges` merge rules from corpus word frequencies.
+    * Returns the merge table (rank, left, right, freq), rank 1 first; fewer
+    * rows when no word has two symbols left before `nMerges`.
+    *
+    * Scale shape: the ONLY distributed work is one word-count shuffle. Its
+    * vocabulary-sized (symbols, freq) table is collected once, and the
+    * merges are learned on the driver from that in-memory table, as
+    * Sennrich et al. do: per merge, sum every adjacent pair's freq, take the
+    * argmax, and fold the winning pair into each word greedily left to
+    * right. No Spark job runs per merge. The collect is bounded by
+    * `spark.driver.maxResultSize`, so a vocabulary too large for the driver
+    * fails loudly. Ties break deterministically: highest count, then
+    * (left, right) ascending in Spark's string order (UTF-8 bytes, which
+    * is code point order, not `String.compareTo`'s UTF-16 order). */
   def bpeTrain(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -973,50 +976,44 @@ object CorpusOps {
       // symbols = characters + the word-end marker
       .select(expr("concat(split(word, ''), array('</w>'))").as("syms"),
         col("freq"))
-      .graftCheckpoint(true)
-    // size the iterated table's partitioning from its measured row count
-    // (~256k words/partition): a toy vocabulary iterates on a few tasks
-    // instead of scheduling full-width stages 2×nMerges times; a 100 TB
-    // vocabulary (hundreds of millions of distinct words) stays wide
-    val nParts = math.max(1, math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      (words.count() / 262144L).toInt + 1))
-    words = words.repartition(nParts).graftCheckpoint(true)
+      .as[(Array[String], Long)].collect()
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
     var exhausted = false
     while (rank <= nMerges && !exhausted) {
-      val top = words
-        .where(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-          "i -> named_struct('l', element_at(syms, i), " +
-          "'r', element_at(syms, i + 1)))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("c"))
-        .orderBy(col("c").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((syms, f) <- words; i <- 0 until syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        counts(p) = counts.getOrElse(p, 0L) + f
+      }
+      if (counts.isEmpty) exhausted = true
       else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2))
+        // strings compare as Spark orders them: UTF-8 bytes, unsigned
+        val ((l, r), c) = counts.minBy { case ((l, r), c) =>
+          (-c, UTF8String.fromString(l), UTF8String.fromString(r))
+        }
         merges += ((rank, l, r, c))
-        // greedy non-overlapping left-to-right replacement: fold symbols,
-        // merging when the accumulator tail is `l` and the next symbol `r`
-        // (the merged l+r differs from l, so a fresh merge can't cascade)
-        words = words.withColumn("syms", aggregate(
-          col("syms"),
-          array().cast("array<string>"),
-          (acc, x) =>
-            when(size(acc) > 0 && element_at(acc, -1) === lit(l) &&
-                 x === lit(r),
-              concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-              .otherwise(concat(acc, array(x)))))
-        if (rank % 4 == 0) words = words.graftCheckpoint(true)
+        words = words.map { case (syms, f) => (mergePair(syms, l, r), f) }
         rank += 1
       }
     }
     merges.result().toDF("rank", "left", "right", "freq")
+  }
+
+  /** Greedy non-overlapping left-to-right replacement of the pair (l, r),
+    * the result of [[bpeEncode]]'s fold (the merged l+r differs from l, so
+    * a fresh merge can't cascade). */
+  private def mergePair(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < syms.length) {
+      if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
+        out += l + r; i += 2
+      } else {
+        out += syms(i); i += 1
+      }
+    }
+    out.result()
   }
 
   /** TF-IDF keyword extraction: the `topK` highest-scoring terms per
@@ -1252,7 +1249,7 @@ object CorpusOps {
     *
     * Scale shape: a pure per-document map — each merge rule is one greedy
     * left-to-right fold over each word's symbol array (the same
-    * `aggregate` HOF the trainer iterates with), chained in rank order
+    * greedy fold [[bpeTrain]] applies), chained in rank order
     * inside a single projection. No shuffle, no join: the merge table
     * rides in the plan.
     *

@@ -378,8 +378,9 @@ object LlmQueries {
         .orderBy(col("doc_id"))),
 
     // BPE tokenizer training: 16 merge rules learned from corpus word
-    // frequencies. Only the word count touches the corpus; merge iterations
-    // run on the vocabulary-sized table. Deterministic tiebreak. Hash-exact
+    // frequencies. The word count is the only Spark work; the merges are
+    // learned on the driver from its collected vocabulary-sized table, with
+    // no job per merge. Deterministic tiebreak. Hash-exact
     // since round 9: the oracle runs the SAME training loop as a DuckDB
     // recursive CTE (bpeTrainOracle below); CorpusOpsSpec additionally pins
     // it against an independent reference implementation.

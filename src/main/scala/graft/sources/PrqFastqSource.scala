@@ -63,17 +63,20 @@ object PrqFastqSource {
   /** Driver-side recursive listing: every data file under `path`, with its
     * Hive-style `sample=` partition value when one appears on its path
     * (unescaped the same way the sink escaped it). Hidden/metadata files
-    * (`_SUCCESS`, `.crc`) are skipped, mirroring FileIndex conventions. */
+    * (`_SUCCESS`, `.crc`) are skipped, mirroring FileIndex conventions.
+    * The walk uses `listStatus`, not `listFiles`: a `LocatedFileStatus`
+    * loads each file's permissions (a forked `ls` per file on a local
+    * file system without Hadoop's native library) and, on HDFS, its block
+    * locations, and planning needs neither. */
   def listFiles(spark: SparkSession, path: String): Seq[(String, String)] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Seq.empty
     val out = Seq.newBuilder[(String, String)]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
       val name = st.getPath.getName
-      if (st.isFile && !name.startsWith("_") && !name.startsWith(".")) {
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.isFile && !name.startsWith("_") && !name.startsWith(".")) {
         val sample = st.getPath.toString.split('/')
           .find(_.startsWith("sample="))
           .map(seg => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -82,6 +85,7 @@ object PrqFastqSource {
         out += ((st.getPath.toString, sample))
       }
     }
+    walk(root)
     out.result().sortBy(_._1)
   }
 }

@@ -25,4 +25,38 @@ trait SparkSpec extends AnyFunSuite {
   }
   def sf0001: String = SparkSpec.sf0001
   def sf001: String = SparkSpec.sf001
+
+  /** Run `body` and return, for each Spark job it submitted, the task
+    * count of each of the job's stages. */
+  def jobsOf[A](body: => A): (A, Seq[Seq[Int]]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val tag = s"jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(t) if t == tag => jobs.add(e.stageInfos.map(_.numTasks))
+          case Some(t) if t == s"$tag-end" => marked.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val a = body
+      // a marker job: a listener sees events in order, so once the marker
+      // arrives every job `body` submitted has been recorded
+      sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(0), 1).count()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (a, scala.jdk.CollectionConverters.IteratorHasAsScala(
+        jobs.iterator()).asScala.toSeq)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -283,40 +283,6 @@ class GenomicsSpec extends SparkSpec {
     assert(e.getMessage.contains(empty.toString), e.getMessage)
   }
 
-  /** Run `body` and return, for each Spark job it submitted, the task
-    * count of each of the job's stages. */
-  private def jobsOf[A](body: => A): (A, Seq[Seq[Int]]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.test.jobsOf"
-    val tag = s"jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
-    val marked = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(t) if t == tag => jobs.add(e.stageInfos.map(_.numTasks))
-          case Some(t) if t == s"$tag-end" => marked.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      val a = body
-      // a marker job: a listener sees events in order, so once the marker
-      // arrives every job `body` submitted has been recorded
-      sc.setLocalProperty(key, s"$tag-end")
-      sc.parallelize(Seq(0), 1).count()
-      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (a, scala.jdk.CollectionConverters.IteratorHasAsScala(
-        jobs.iterator()).asScala.toSeq)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("decodeRun lists on the driver: no job to build, one task per tile to run") {
     // 2 lanes x 2 tiles x 11 cycles = 44 cycle files plus filters and
     // coordinates: more than the 32 paths above which Spark's file index
@@ -603,6 +569,19 @@ class GenomicsSpec extends SparkSpec {
     intercept[Exception] {
       spark.read.format("fastq").load(dir.resolve("nope").toString).collect()
     }
+    // the listing skips metadata files and descends into partition dirs
+    Files.writeString(dir.resolve("_SUCCESS"), "")
+    Files.writeString(dir.resolve(".part-0.txt.crc"), "crc")
+    Files.createDirectories(dir.resolve("sample=x"))
+    Files.writeString(dir.resolve("sample=x").resolve("part-1.txt"),
+      "r2\tGGGG\tJJJJ\tTT\tKK\n")
+    val listed = graft.sources.PrqFastqSource.listFiles(spark, dir.toString)
+      .map { case (f, sample) => (f.stripPrefix(s"file:$dir/"), sample) }
+    assert(listed == Seq(("part-0.txt", null), ("sample=x/part-1.txt", "x")),
+      listed.toString)
+    val all = spark.read.format("prq").load(dir.toString).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(all == Seq((null, "r1"), ("x", "r2")), all.toString)
   }
 
   test("fastq DataSource V2: 4-line chunker parity with parseFastq") {
@@ -945,6 +924,21 @@ class GenomicsSpec extends SparkSpec {
     }
     val msg = e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
     assert(msg.contains("truncated"), s"expected truncation error, got: $msg")
+  }
+
+  test("pipe feeds a coalesced multi-file sample scan through the process") {
+    val prq = Files.createTempDirectory("graft_pipe_coalesce")
+    val sampleDir = Files.createDirectories(prq.resolve("sample=s1"))
+    val lines = (0 until 3).map(i => s"r$i\tACGT\tIIII\tTTTT\tJJJJ")
+    lines.zipWithIndex.foreach { case (l, i) =>
+      Files.writeString(sampleDir.resolve(s"part-$i.txt"), l + "\n")
+    }
+    // one task reads all three files; the stdin writer thread pulls the
+    // input, so it opens the second and third files' readers
+    val out = ExternalProcessMap.pipePartitions(
+      Pipeline.readSamplePrq(spark, prq.toString, "s1").coalesce(1), Seq("cat"))
+      .collect().toSeq
+    assert(out.sorted == lines)
   }
 
   test("external-process map fails fast on nonzero exit (R11 contract)") {

@@ -330,31 +330,21 @@ class CorpusOpsSpec extends SparkSpec {
       "salt change must permute the packing order")
   }
 
-  test("BPE training matches a local reference implementation") {
-    val s = spark
-    import s.implicits._
-    // word freqs: low 3, lower 2, newest 2, wider 1  (shared "lo", "er",
-    // "we"/"w e" patterns force real merge interactions and ties)
-    val docs = Seq(
-      (0L, "low low lower newest"),
-      (1L, "low lower newest wider")
-    ).toDF("doc_id", "text")
-    val got = CorpusOps.bpeTrain(docs, nMerges = 8).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
-    // independent reference BPE (Sennrich-style), same tiebreak
+  /** Independent reference BPE (Sennrich-style) over word frequencies:
+    * highest pair count, ties by (left, right) in `String` order — Spark's
+    * UTF-8 order for the ASCII corpora it is used on. */
+  private def referenceBpe(wordFreqs: Seq[(String, Long)],
+                           nMerges: Int): Seq[(Int, String, String, Long)] = {
     def mergeGreedy(syms: Vector[String], l: String, r: String): Vector[String] =
       syms.foldLeft(Vector.empty[String]) { (acc, x) =>
         if (acc.nonEmpty && acc.last == l && x == r)
           acc.init :+ (l + r)
         else acc :+ x
       }
-    val wordFreqs = Seq("low" -> 3L, "lower" -> 2L, "newest" -> 2L,
-      "wider" -> 1L)
     var vocab = wordFreqs.map { case (w, f) =>
       (w.map(_.toString).toVector :+ "</w>") -> f }
     val want = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    for (rank <- 1 to 8) {
+    for (rank <- 1 to nMerges) {
       val counts = scala.collection.mutable.Map[(String, String), Long]()
         .withDefaultValue(0L)
       for ((syms, f) <- vocab; i <- 0 until syms.length - 1)
@@ -365,10 +355,75 @@ class CorpusOpsSpec extends SparkSpec {
         vocab = vocab.map { case (syms, f) => mergeGreedy(syms, l, r) -> f }
       }
     }
-    assert(got == want.toSeq, s"got:\n${got.mkString("\n")}\nwant:\n${want.mkString("\n")}")
+    want.toSeq
+  }
+
+  private def bpeRows(docs: org.apache.spark.sql.DataFrame,
+                      nMerges: Int): Seq[(Int, String, String, Long)] =
+    CorpusOps.bpeTrain(docs, nMerges).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .toSeq
+
+  test("BPE training matches a local reference implementation") {
+    val s = spark
+    import s.implicits._
+    // word freqs: low 3, lower 2, newest 2, wider 1  (shared "lo", "er",
+    // "we"/"w e" patterns force real merge interactions and ties)
+    val docs = Seq(
+      (0L, "low low lower newest"),
+      (1L, "low lower newest wider")
+    ).toDF("doc_id", "text")
+    val got = bpeRows(docs, nMerges = 8)
+    val want = referenceBpe(Seq("low" -> 3L, "lower" -> 2L, "newest" -> 2L,
+      "wider" -> 1L), 8)
+    assert(got == want, s"got:\n${got.mkString("\n")}\nwant:\n${want.mkString("\n")}")
     // merges must be usable: applying them re-derives multi-char tokens
     assert(got.map(m => m._2 + m._3).exists(_.length >= 3),
       "some merged symbol should span 3+ chars after 8 merges")
+  }
+
+  test("BPE training stops when no word has two symbols left") {
+    val s = spark
+    import s.implicits._
+    // "ab" ×2, "a" ×1: three merges exhaust the vocabulary
+    val got = bpeRows(Seq((0L, "ab ab a")).toDF("doc_id", "text"), nMerges = 10)
+    assert(got == Seq((1, "a", "b", 2L), (2, "ab", "</w>", 2L),
+      (3, "a", "</w>", 1L)), got.toString)
+  }
+
+  test("BPE training breaks count ties in UTF-8 order, not UTF-16 order") {
+    val s = spark
+    import s.implicits._
+    // U+E000 encodes below U+1F600 in UTF-8 (EE.. < F0..) but above it in
+    // UTF-16 (E000 > D83D): every pair here counts 1, so the order of the
+    // merges is the tiebreak's alone — right side first, then left side
+    val pua = "\uE000"
+    val emoji = new String(Character.toChars(0x1F600))
+    val got = bpeRows(Seq((0L, s"a$pua a$emoji")).toDF("doc_id", "text"),
+      nMerges = 5)
+    assert(got == Seq(
+      (1, "a", pua, 1L),
+      (2, "a", emoji, 1L),
+      (3, s"a$pua", "</w>", 1L),
+      (4, s"a$emoji", "</w>", 1L)), got.toString)
+  }
+
+  test("BPE training matches the reference on a generated corpus") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(12)
+    val docs = (0L until 200L).map { id =>
+      val words = Seq.fill(5 + rnd.nextInt(11)) {
+        Seq.fill(1 + rnd.nextInt(8))("abcdefgh"(rnd.nextInt(8))).mkString
+      }
+      (id, words.mkString(" "))
+    }
+    val wordFreqs = docs.flatMap(_._2.split(" ")).groupBy(identity)
+      .map { case (w, ws) => w -> ws.size.toLong }.toSeq
+    val got = bpeRows(docs.toDF("doc_id", "text"), nMerges = 64)
+    val want = referenceBpe(wordFreqs, 64)
+    assert(got.size == 64)
+    assert(got == want, s"got:\n${got.mkString("\n")}\nwant:\n${want.mkString("\n")}")
   }
 
   test("BPE encoding applies trained merges exactly as the reference") {
